@@ -214,7 +214,7 @@ def run_snapshot(
     ``read_fn(fqn)`` abstracts the target read — the runner passes a
     PATH-based reader because partitioned catalog tables resolve their
     partition listing at execution time, after the swap's DROP TABLE
-    (see Engine._read_relation_for_merge).
+    (see ParquetFormat.read_for_merge).
     """
     read = read_fn or spark.table
     existing = (

@@ -698,72 +698,60 @@ def quality_classifier(
             F.col(bucket_col).cast("int").alias("_b"),
             F.col(weight_col).cast("bigint").alias("_w"),
         )
+        # Contract on both paths: buckets in range and unique, weights
+        # non-null (a NULL would poison the integer fold on the literal
+        # path but coalesce to 0 on the join path; the same table must
+        # behave identically on both).
+        stats_agg = [
+            F.min("_b").alias("lo"),
+            F.max("_b").alias("hi"),
+            F.count("*").alias("n"),
+            F.countDistinct("_b").alias("nd"),
+            F.count(F.when(F.col("_b").isNull(), 1)).alias("null_b"),
+            F.count(F.when(F.col("_w").isNull(), 1)).alias("null_w"),
+        ]
         if n_buckets <= max_literal_buckets:
-            # Literal path (r14): validate on the SAME bounded collect
-            # that builds the literal array — the earlier separate
-            # validation aggregate executed the whole weight pipeline
-            # (a full training corpus pass when `weights` is
-            # train_quality_weights' output) a second time.  The
-            # collect stays OOM-safe via limit(n_buckets + 1): any
-            # table with more rows than buckets must, by pigeonhole,
-            # contain an out-of-range or duplicate bucket WITHIN the
-            # first n_buckets+1 rows, so the driver-side checks below
-            # still raise on mal-keyed tables without ever holding more
-            # than n_buckets+1 rows.
+            # Literal path: validate on the SAME bounded collect that
+            # builds the literal array, so valid tables pay no second
+            # execution of the weight pipeline.  limit(n_buckets + 1)
+            # keeps it OOM-safe: a table with more rows than buckets is
+            # mal-keyed by pigeonhole, and which rows an unordered limit
+            # returns must not pick the error, so that case runs the
+            # join path's one-row aggregate over the whole table.
             collected_rows = wtab.limit(n_buckets + 1).collect()
-            seen: set = set()
-            dup = False
-            for r in collected_rows:
-                b = r["_b"]
-                if b is None or b < 0 or b >= n_buckets:
-                    raise ValueError(
-                        f"weight table has buckets outside [0, {n_buckets})"
-                    )
-                if b in seen:
-                    dup = True
-                seen.add(b)
-            if dup:
+            if len(collected_rows) > n_buckets:
+                st = wtab.agg(*stats_agg).collect()[0].asDict()
+            else:
+                bs = [r["_b"] for r in collected_rows]
+                known = [b for b in bs if b is not None]
+                st = {
+                    "lo": min(known, default=None),
+                    "hi": max(known, default=None),
+                    "n": len(bs),
+                    "nd": len(set(known)),
+                    "null_b": len(bs) - len(known),
+                    "null_w": sum(r["_w"] is None for r in collected_rows),
+                }
+        else:
+            # Join path: the table may be arbitrarily large, so the
+            # contract runs as a bounded 1-row aggregate.
+            st = wtab.agg(*stats_agg).collect()[0]
+        if st["n"]:
+            if st["null_b"] or st["lo"] < 0 or st["hi"] >= n_buckets:
+                raise ValueError(
+                    f"weight table has buckets outside [0, {n_buckets})"
+                )
+            if st["nd"] != st["n"]:
                 raise ValueError(
                     "weight table has duplicate bucket rows — collapse "
                     "them before inference (a fan-out here would double-"
                     "count features)"
                 )
-            if any(r["_w"] is None for r in collected_rows):
+            if st["null_w"]:
                 raise ValueError(
                     "weight table has NULL weights — impute or drop "
                     "them before inference"
                 )
-        else:
-            # Join path: the table may be arbitrarily large, so the
-            # contract runs as a bounded 1-row aggregate (buckets in
-            # range and unique, weights non-null — a NULL would poison
-            # the integer fold on the literal path but coalesce to 0 on
-            # the join path; the same table must behave identically on
-            # both).
-            st = wtab.agg(
-                F.min("_b").alias("lo"),
-                F.max("_b").alias("hi"),
-                F.count("*").alias("n"),
-                F.countDistinct("_b").alias("nd"),
-                F.count(F.when(F.col("_b").isNull(), 1)).alias("null_b"),
-                F.count(F.when(F.col("_w").isNull(), 1)).alias("null_w"),
-            ).collect()[0]
-            if st["n"]:
-                if st["null_b"] or st["lo"] < 0 or st["hi"] >= n_buckets:
-                    raise ValueError(
-                        f"weight table has buckets outside [0, {n_buckets})"
-                    )
-                if st["nd"] != st["n"]:
-                    raise ValueError(
-                        "weight table has duplicate bucket rows — collapse "
-                        "them before inference (a fan-out here would double-"
-                        "count features)"
-                    )
-                if st["null_w"]:
-                    raise ValueError(
-                        "weight table has NULL weights — impute or drop "
-                        "them before inference"
-                    )
 
     if weights is not None and n_buckets > max_literal_buckets:
         # Broadcast-join path for vocabularies too large to inline.

@@ -27,6 +27,8 @@ output or project.yml top level); default parquet.
 from __future__ import annotations
 
 import re
+import shutil
+import uuid
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
@@ -113,6 +115,52 @@ def qualify_predicate(pred: str, columns: list[str], alias: str = "t") -> str:
         return f"{alias}.{tok}" if quoted else f"{alias}.`{tok}`"
 
     return _PRED_TOKEN_RE.sub(_sub, pred)
+
+
+def as_list(value) -> list:
+    """A config value given as one name or a list of them, as a list."""
+    if not value:
+        return []
+    return [value] if isinstance(value, str) else list(value)
+
+
+def overwrite_partitions(
+    spark, df: DataFrame, fqn: str, fmt: str | None = None
+) -> None:
+    """Replace exactly the partitions of ``fqn`` that ``df`` has rows
+    for: a positional ``insertInto`` (columns in target order) under
+    dynamic partition overwrite, which also works on v1 path-based
+    parquet tables (``writeTo().overwritePartitions()`` is DSv2-only).
+    The mode is set for this write only and then restored: session
+    confs are process-global, and a leftover ``dynamic`` would change
+    every later static overwrite in the session."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
+    try:
+        writer = df.select(*spark.table(fqn).columns).write
+        if fmt:
+            writer = writer.format(fmt)
+        writer.mode("overwrite").insertInto(fqn)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def _table_writer(df, fmt, mode, loc, partition_cols, bucket):
+    """An external-table writer at ``loc``.  ``bucket`` is
+    ``{"columns": [...], "buckets": n}``: hash-bucketed + sorted files
+    let equal-bucketed tables join with NO shuffle on the bucket key
+    (the Spark analog of co-located BigQuery clustering; SURVEY §7.7)."""
+    writer = df.write.format(fmt).mode(mode).option("path", loc)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    if bucket:
+        cols = bucket["columns"]
+        writer = writer.bucketBy(int(bucket.get("buckets", 8)), *cols).sortBy(*cols)
+    return writer
 
 
 class TableFormat:
@@ -202,25 +250,13 @@ class ParquetFormat(TableFormat):
             or engine._catalog.get(fqn, {}).get("location")
             or engine._relation_path(fqn)
         )
-        writer = df.write.format("parquet").mode(mode).option("path", loc)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        if bucket:
-            # bucket_by = {"columns": [...], "buckets": n} — hash-
-            # bucketed + sorted files let equal-bucketed tables join
-            # with NO shuffle on the bucket key (the Spark analog of
-            # co-located BigQuery clustering; SURVEY §7.7).  Over-
-            # writing a bucketed table in place requires a drop first
-            # (Spark forbids changing bucket spec via path overwrite).
-            cols = bucket["columns"]
-            n = int(bucket.get("buckets", 8))
-            if engine.spark.catalog.tableExists(fqn):
-                engine.spark.sql(f"DROP TABLE IF EXISTS {fqn}")
-                import shutil
-
-                shutil.rmtree(loc, ignore_errors=True)
-            writer = writer.bucketBy(n, *cols).sortBy(*cols)
-        writer.saveAsTable(fqn)
+        if bucket and engine.spark.catalog.tableExists(fqn):
+            # Overwriting a bucketed table in place requires a drop
+            # first (Spark forbids changing bucket spec via path
+            # overwrite).
+            engine.spark.sql(f"DROP TABLE IF EXISTS {fqn}")
+            shutil.rmtree(loc, ignore_errors=True)
+        _table_writer(df, self.name, mode, loc, partition_cols, bucket).saveAsTable(fqn)
 
     def read_for_merge(self, engine: "Engine", fqn: str) -> DataFrame:
         """Read an incremental/merge target by PATH, not through the
@@ -260,25 +296,16 @@ class ParquetFormat(TableFormat):
         Parquet can't be read and overwritten in one job, so the
         merged touched-partition rows stage to a side directory first
         (cost scales with the touched partitions, not the table), then
-        land via ``insertInto`` under dynamic partitionOverwriteMode —
-        the v1-table dynamic overwrite that swaps whole partition dirs.
+        land via :func:`overwrite_partitions`, which swaps whole
+        partition directories.
         """
-        import shutil
-        import uuid
-
         target_cols = engine.spark.table(fqn).columns
         stage = f"{engine._relation_path(fqn)}__mstg{uuid.uuid4().hex[:8]}"
         merged.select(*target_cols).write.format("parquet").mode(
             "overwrite"
         ).save(stage)
         try:
-            with engine._conf_override(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            ):
-                # insertInto is positional: select in target column order
-                engine.spark.read.parquet(stage).select(
-                    *target_cols
-                ).write.mode("overwrite").insertInto(fqn)
+            overwrite_partitions(engine.spark, engine.spark.read.parquet(stage), fqn)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         engine.spark.catalog.refreshTable(fqn)
@@ -299,17 +326,8 @@ class _TransactionalFormat(TableFormat):
         bucket: dict[str, Any] | None = None,
         path: str | None = None,
     ) -> None:
-        writer = (
-            df.write.format(self.name)
-            .mode(mode)
-            .option("path", path or engine._relation_path(fqn))
-        )
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        if bucket:
-            cols = bucket["columns"]
-            n = int(bucket.get("buckets", 8))
-            writer = writer.bucketBy(n, *cols).sortBy(*cols)
+        loc = path or engine._relation_path(fqn)
+        writer = _table_writer(df, self.name, mode, loc, partition_cols, bucket)
         if mode == "overwrite":
             writer = writer.option("overwriteSchema", "true")
         writer.saveAsTable(fqn)
@@ -325,13 +343,7 @@ class _TransactionalFormat(TableFormat):
     ) -> None:
         # Dynamic partition overwrite is native and transactional in
         # both formats — no staging directory required.
-        target_cols = engine.spark.table(fqn).columns
-        with engine._conf_override(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            merged.select(*target_cols).write.format(self.name).mode(
-                "overwrite"
-            ).insertInto(fqn)
+        overwrite_partitions(engine.spark, merged, fqn, fmt=self.name)
 
     def merge(
         self,
@@ -351,20 +363,13 @@ class _TransactionalFormat(TableFormat):
         df.createOrReplaceTempView(src)
         try:
             on = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in key_cols)
-            preds = node_config.get("incremental_predicates") or []
-            if isinstance(preds, str):
-                preds = [preds]
-            for p in preds:
+            for p in as_list(node_config.get("incremental_predicates")):
                 # predicates are written against the target relation;
                 # qualify bare column refs with the t alias (bare names
                 # are ambiguous inside MERGE — both t and s carry them)
                 on += f" AND ({qualify_predicate(p, df.columns)})"
-            upd_cols = node_config.get("merge_update_columns") or []
-            exc_cols = node_config.get("merge_exclude_columns") or []
-            if isinstance(upd_cols, str):
-                upd_cols = [upd_cols]
-            if isinstance(exc_cols, str):
-                exc_cols = [exc_cols]
+            upd_cols = as_list(node_config.get("merge_update_columns"))
+            exc_cols = as_list(node_config.get("merge_exclude_columns"))
             cols = [c for c in df.columns if c not in key_cols]
             if upd_cols:
                 set_cols = [c for c in cols if c in set(upd_cols)]

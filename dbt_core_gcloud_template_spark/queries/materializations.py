@@ -209,7 +209,7 @@ def incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # incremental_microbatch — dbt 1.9 microbatch under the value hash
-# (plans/runner.py _run_microbatch: event-time periods, stored
+# (plans/runner.py _mat_microbatch: event-time periods, stored
 # watermark, lookback window, dynamic partition overwrite).  Replay
 # over events (2024-01-01..2024-01-30 at every SF):
 #   - delivery 1 (cold build) = every event EXCEPT a "late" subset

@@ -411,7 +411,7 @@ def stream_into_incremental(
     its own input).  ``read_relation(fqn)`` defaults to the catalog
     read; pass a path-based reader for partitioned targets (the
     CatalogFileIndex lists partitions at execution time — see
-    Engine._read_relation_for_merge).  ``config`` flows through to the
+    ParquetFormat.read_for_merge).  ``config`` flows through to the
     writer, so an Engine-backed writer with ``partition_by`` rewrites
     only the batch's partitions.  At scale: each micro-batch is small
     by construction, so the anti-join's left side prunes to the

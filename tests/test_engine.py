@@ -280,6 +280,64 @@ def test_job_execution_timeout_watchdog(spark, sf_dir, tmp_path):
     assert "job_execution_timeout_seconds" in slow.message or "cancelled" in slow.message.lower()
 
 
+def test_node_seam_job_group_labels_and_pool(spark, sf_dir, tmp_path):
+    """Every node runs under its own job group (id = node uid), a job
+    description carrying the target's labels, and the scheduler pool
+    named by the target's priority — read back from inside a model."""
+    proj = tmp_path / "seamproj"
+    make_project(proj, sf_dir, schema="seam_test")
+    (proj / "profiles.yml").write_text(
+        "t:\n  target: dev\n  outputs:\n    dev:\n      schema: seam_test\n"
+        "      threads: 2\n      priority: batch\n"
+        "      labels: {team: data, env: ci}\n"
+    )
+    (proj / "models" / "marts" / "seam_probe.py").write_text(
+        "def model(dbt, session):\n"
+        "    sc = session.sparkContext\n"
+        "    props = [sc.getLocalProperty(k) for k in (\n"
+        "        'spark.jobGroup.id', 'spark.job.description',\n"
+        "        'spark.scheduler.pool')]\n"
+        "    return session.createDataFrame(\n"
+        "        [props], 'grp string, descr string, pool string')\n"
+    )
+    eng = Engine(spark, str(proj))
+    r, _ = eng.build(select="seam_probe")
+    assert [x.status for x in r.results] == ["success"]
+    row = spark.table("seam_test.seam_probe").first()
+    assert row.grp == "model.t.seam_probe"
+    assert row.descr == "t:model.t.seam_probe team=data env=ci"
+    assert row.pool == "batch"
+
+
+def test_catalog_write_survives_failed_dump(spark, sf_dir, tmp_path, monkeypatch):
+    """The shared relation catalog is replaced atomically: a dump that
+    dies part-way leaves the previous catalog readable, so the next
+    Engine still starts."""
+    import json as _json
+
+    proj = tmp_path / "catproj"
+    make_project(proj, sf_dir, schema="cat_test")
+    eng = Engine(spark, str(proj))
+    eng.create_view("cat_test.v_one", "select 1 as x")
+    with open(eng._catalog_path) as f:
+        prior = _json.load(f)
+    assert "cat_test.v_one" in prior
+
+    def torn_dump(obj, fp, **kw):
+        fp.write('{"cat_test.v_one": {"type": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(_json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        eng.create_view("cat_test.v_two", "select 2 as x")
+    monkeypatch.undo()
+    with open(eng._catalog_path) as f:
+        assert _json.load(f) == prior
+    wh = os.path.dirname(eng._catalog_path)
+    assert not [n for n in os.listdir(wh) if n.endswith(".tmp")]
+    Engine(spark, str(proj))
+
+
 def test_store_failures_audit_table(spark, sf_dir, tmp_path):
     """dbt store_failures parity: failing tests persist their violating
     rows to <schema>_dbt_test__audit.<test_name>."""

@@ -2700,11 +2700,20 @@ def test_quality_classifier_trained_weights_paths_agree(spark):
     nullw = spark.createDataFrame(
         [(1, 5), (2, None)], "bucket int, w_micro long"
     )
+    # longer than n_buckets + 1, all duplicates except an out-of-range
+    # bucket last: the literal path's bounded collect sees only
+    # duplicates, yet the error must match the join path's
+    long_bad = spark.createDataFrame(
+        [(1, 5)] * (n_buckets + 4) + [(n_buckets + 3, 1)],
+        "bucket int, w_micro long",
+    )
     for kw in ({}, {"max_literal_buckets": 0}):
-        with pytest.raises(ValueError, match="outside"):
-            quality_classifier(
-                docs, "doc_id", "text", n_buckets=n_buckets, weights=bad, **kw
-            )
+        for table in (bad, long_bad):
+            with pytest.raises(ValueError, match="outside"):
+                quality_classifier(
+                    docs, "doc_id", "text", n_buckets=n_buckets,
+                    weights=table, **kw
+                )
         with pytest.raises(ValueError, match="duplicate"):
             quality_classifier(
                 docs, "doc_id", "text", n_buckets=n_buckets, weights=dup, **kw

@@ -5,7 +5,13 @@ queries) — for optimization-loop iteration without paying for the full
 
 Usage: python tools/bench_subset.py name1 name2 ...  [env: SPARK_GRAFT_SF_DIR]
 Prints one JSON line {name: median_sec, ...} plus the two calibration
-probes so runs on a loaded box remain comparable.
+probes so runs on a loaded box remain comparable, and under "spark" the
+Spark jobs, stages and tasks of each query's last timed run — counts
+that, unlike seconds, do not move with box load.
+
+Per-node profiles of an engine build come from the benchmark's traced
+run: python3 perfbench/run.py --workload curation_build --seed 1
+--seconds 1 --trace 1
 """
 
 from __future__ import annotations
@@ -32,20 +38,36 @@ def main() -> None:
     )
     qs = queries()
     warmup(spark)
-    results: dict[str, float] = {}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    results: dict = {}
     results["calibration_range_agg"] = calibration(spark)
     results["calibration_hash_cpu"] = calibration_compute(spark)
+    counts: dict[str, dict[str, int]] = {}
     for name in names:
         fn = qs[name]
-        spark.sparkContext.setJobDescription(f"bench_subset: {name}")
+        sc.setJobDescription(f"bench_subset: {name}")
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times = []
-        for _ in range(RUNS):
+        for i in range(RUNS):
+            if i == RUNS - 1:
+                sc.setJobGroup(f"bench_subset:{name}", name)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times.append(time.time() - t0)
         results[name] = round(statistics.median(times), 3)
+        jobs = tracker.getJobIdsForGroup(f"bench_subset:{name}")
+        sc.setJobGroup(None, None)
+        # a stage id can appear under several jobs (reused shuffles)
+        stage_ids = {s for j in jobs if (ji := tracker.getJobInfo(j)) for s in ji.stageIds}
+        stages = [si for s in stage_ids if (si := tracker.getStageInfo(s))]
+        counts[name] = {
+            "jobs": len(jobs),
+            "stages": len(stages),
+            "tasks": sum(s.numTasks for s in stages),
+        }
         spark.catalog.clearCache()
+    results["spark"] = counts
     print(json.dumps(results))
 
 
