@@ -75,6 +75,35 @@ def feature_buckets(text: Column, n_buckets: int) -> Column:
     return feature_buckets_from_tokens(tokens_expr(text), n_buckets)
 
 
+def log_odds_micro(
+    pos: Column, pos_total: Column, neg: Column, neg_total: Column, n_buckets: int
+) -> Column:
+    """Add-1-smoothed bucket log-odds as BIGINT micro-units:
+    ``round(1e6 · ln(p/q))`` with ``p = (pos + 1)/(pos_total + B)`` and
+    ``q = (neg + 1)/(neg_total + B)``; the constant bucket count keeps
+    never-seen buckets finite.  Shared by DSIR and the quality-classifier
+    trainer.  Double arithmetic BEFORE multiplying (bigint products of
+    two corpus-scale counts would overflow at 100 TB); the double op
+    order mirrors the oracle SQL token-for-token (IEEE-identical)."""
+    return (
+        F.round(
+            F.lit(1e6)
+            * F.log(
+                (
+                    (pos + 1).cast("double")
+                    * (neg_total + F.lit(n_buckets)).cast("double")
+                )
+                / (
+                    (neg + 1).cast("double")
+                    * (pos_total + F.lit(n_buckets)).cast("double")
+                )
+            ),
+            0,
+        )
+        .cast("bigint")
+    )
+
+
 def dsir_log_weights(
     df: DataFrame,
     id_col: str,
@@ -128,30 +157,12 @@ def dsir_log_weights(
     totals = buckets.agg(
         F.sum("_tc").alias("_tt"), F.sum("_sc").alias("_st")
     )
-    # L_b = round(1e6 * ln(p_b/q_b)); add-1 smoothing with the constant
-    # bucket count keeps never-seen-in-target buckets finite.
+    # L_b = round(1e6 * ln(p_b/q_b)), target vs whole-source counts
     ratios = buckets.crossJoin(F.broadcast(totals)).select(
         "_b",
-        F.round(
-            F.lit(1e6)
-            * F.log(
-                # double arithmetic BEFORE multiplying: bigint products
-                # of two corpus-scale counts would overflow at 100 TB,
-                # and the double op order here mirrors the oracle SQL
-                # token-for-token (IEEE-identical)
-                (
-                    (F.col("_tc") + 1).cast("double")
-                    * (F.col("_st") + F.lit(n_buckets)).cast("double")
-                )
-                / (
-                    (F.col("_sc") + 1).cast("double")
-                    * (F.col("_tt") + F.lit(n_buckets)).cast("double")
-                )
-            ),
-            0,
-        )
-        .cast("bigint")
-        .alias("_L"),
+        log_odds_micro(
+            F.col("_tc"), F.col("_tt"), F.col("_sc"), F.col("_st"), n_buckets
+        ).alias("_L"),
     )
     return (
         dbc.join(F.broadcast(ratios), "_b")

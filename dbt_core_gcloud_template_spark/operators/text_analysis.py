@@ -8,12 +8,13 @@ oracle reproduces every value.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_int60
-from ..functions.text import LANG_STOPWORDS, shingles_expr, tokens_expr
+from ..functions.hashing import md5_int28, md5_int28_py, md5_int60
+from ..functions.text import BLOCKLISTS, LANG_STOPWORDS, shingles_expr, tokens_expr
 from ..sources.registry import ensure_parallelism
+from .importance import feature_buckets_from_tokens, log_odds_micro
 
 PUNCT_CLASS = "[.,;:!?]"  # frozen; identical regex class in Java + RE2
 CJK_CLASS = r"[\x{4E00}-\x{9FFF}]"  # CJK Unified Ideographs; same syntax both engines
@@ -24,15 +25,70 @@ def _stop_hits(tok: Column, words: list[str]) -> Column:
     return F.size(F.filter(tok, lambda t: F.array_contains(arr, t)))
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace token counts + distinct counts + mean token length."""
+def _tokenized(df: DataFrame, text_col: str, *cols: str) -> DataFrame:
+    """Rows with at least one token: ``cols`` plus the token array bound
+    as ``_tok``.  Consumers reference the array many times; an inline
+    tokens expression would re-tokenize the document per reference."""
     df = ensure_parallelism(df)
     tok = tokens_expr(F.col(text_col))
-    # token array bound as a column: the four consumers below would
-    # otherwise each re-tokenize the document (r13)
-    base = df.filter(F.size(tok) > 0).select(  # cheap input-side filter
-        F.col(id_col), tok.alias("_tok")
+    return df.filter(F.size(tok) > 0).select(  # cheap input-side filter
+        *[F.col(c) for c in cols], tok.alias("_tok")
     )
+
+
+def _quality_cols(text: Column, tok: Column, stop_hits: Column) -> list[Column]:
+    """n_tokens, punct_ratio, stopword_ratio and quality_score of
+    :func:`quality_score`, from the text, its bound token array and its
+    English stopword-hit count."""
+    n_chars = F.length(text)
+    n_punct = n_chars - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
+    n_tok = F.size(tok)
+    punct_ratio = n_punct.cast("double") / n_chars
+    stop_ratio = stop_hits.cast("double") / n_tok
+    score = (
+        F.lit(0.4) * F.least(F.lit(1.0), n_tok.cast("double") / F.lit(100.0))
+        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
+        + F.lit(0.3) * F.least(F.lit(1.0), F.lit(5.0) * stop_ratio)
+    )
+    return [
+        n_tok.alias("n_tokens"),
+        F.round(punct_ratio, 6).alias("punct_ratio"),
+        F.round(stop_ratio, 6).alias("stopword_ratio"),
+        F.round(score, 6).alias("quality_score"),
+    ]
+
+
+def _lang_scores(tok: Column) -> list[Column]:
+    """Per-language stopword-evidence scores ``_s_<lang>`` over a bound
+    token array, in LANG_STOPWORDS order."""
+    return [
+        _stop_hits(tok, words).alias(f"_s_{lang}")
+        for lang, words in LANG_STOPWORDS.items()
+    ]
+
+
+def _lang_pred(text: Column) -> tuple[Column, Column]:
+    """CJK character count and the predicted language over bound
+    ``_s_<lang>`` scores: CJK first, then argmax with tie order
+    en > de > fr > es, 'unknown' without evidence.  The ladder
+    references each score up to 4 times, so the scores must be bound
+    columns, not inline token-array expressions."""
+    cjk = F.length(text) - F.length(F.regexp_replace(text, CJK_CLASS, ""))
+    en, de, fr, es = (F.col(f"_s_{lang}") for lang in ("en", "de", "fr", "es"))
+    pred = (
+        F.when(cjk > 0, "zh")
+        .when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
+        .when((de >= fr) & (de >= es) & (de > 0), "de")
+        .when((fr >= es) & (fr > 0), "fr")
+        .when(es > 0, "es")
+        .otherwise("unknown")
+    )
+    return cjk, pred
+
+
+def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Whitespace token counts + distinct counts + mean token length."""
+    base = _tokenized(df, text_col, id_col)
     tokc = F.col("_tok")
     char_sum = F.aggregate(
         F.transform(tokc, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
@@ -51,30 +107,10 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     score = 0.4*min(1, n_tokens/100) + 0.3*(1 - punct_ratio) + 0.3*min(1, 5*stop_ratio)
     All double arithmetic in a fixed order → bit-identical in the oracle.
     """
-    df = ensure_parallelism(df)
-    tok = tokens_expr(F.col(text_col))
-    # token array bound as a column: n_tok/stop each feed several
-    # consumers that would otherwise re-tokenize per reference (r13)
-    base = df.filter(F.size(tok) > 0).select(  # cheap input-side filter
-        F.col(id_col), F.col(text_col), tok.alias("_tok")
-    )
-    n_chars = F.length(F.col(text_col))
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), PUNCT_CLASS, ""))
-    n_tok = F.size(F.col("_tok"))
+    base = _tokenized(df, text_col, id_col, text_col)
     stop = _stop_hits(F.col("_tok"), LANG_STOPWORDS["en"])
-    punct_ratio = n_punct.cast("double") / n_chars
-    stop_ratio = stop.cast("double") / n_tok
-    score = (
-        F.lit(0.4) * F.least(F.lit(1.0), n_tok.cast("double") / F.lit(100.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-        + F.lit(0.3) * F.least(F.lit(1.0), F.lit(5.0) * stop_ratio)
-    )
     return base.select(
-        F.col(id_col),
-        n_tok.alias("n_tokens"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
+        F.col(id_col), *_quality_cols(F.col(text_col), F.col("_tok"), stop)
     )
 
 
@@ -82,42 +118,20 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Stopword-evidence language ID with a CJK fast path.
 
     Deterministic argmax with tie order en > de > fr > es; 'unknown'
-    when no evidence.  Output: id, predicted_lang, per-language scores.
+    when no evidence.  Keeps every row.  Output: id, predicted_lang,
+    per-language scores.
     """
     df = ensure_parallelism(df)
     tok = tokens_expr(F.col(text_col))
-    # two-step ladder (r13): bind the token array, then bind each
-    # language's evidence score — the argmax CASE references every
-    # score up to 4 times, and each score referenced the token array,
-    # so the single-projection form re-tokenized the document ~15×
     base = df.select(F.col(id_col), F.col(text_col), tok.alias("_tok"))
     scored = base.select(
-        F.col(id_col),
-        F.col(text_col),
-        *[
-            _stop_hits(F.col("_tok"), words).alias(f"_s_{lang}")
-            for lang, words in LANG_STOPWORDS.items()
-        ],
+        F.col(id_col), F.col(text_col), *_lang_scores(F.col("_tok"))
     )
-    cjk = F.length(F.col(text_col)) - F.length(
-        F.regexp_replace(F.col(text_col), CJK_CLASS, "")
-    )
-    en, de, fr, es = (F.col(f"_s_{lang}") for lang in ("en", "de", "fr", "es"))
-    pred = (
-        F.when(cjk > 0, "zh")
-        .when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
-        .when((de >= fr) & (de >= es) & (de > 0), "de")
-        .when((fr >= es) & (fr > 0), "fr")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
+    cjk, pred = _lang_pred(F.col(text_col))
     return scored.select(
         F.col(id_col),
         pred.alias("predicted_lang"),
-        en.alias("en_score"),
-        de.alias("de_score"),
-        fr.alias("fr_score"),
-        es.alias("es_score"),
+        *[F.col(f"_s_{lang}").alias(f"{lang}_score") for lang in LANG_STOPWORDS],
         cjk.cast("int").alias("cjk_chars"),
     )
 
@@ -133,57 +147,21 @@ def quality_lang_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame
 
     Row semantics match the inner join: only rows with a non-empty
     token array survive (quality_score's filter; lang_id keeps all
-    rows, so the join keyed on quality rows).  Every expression below
-    is the SAME expression the two operators build, so the values are
-    bit-identical.
+    rows, so the join keyed on quality rows).  Both operators' columns
+    come from the same builders, so the values are bit-identical.
 
     Output: <id_col>, n_tokens, punct_ratio, stopword_ratio,
     quality_score, predicted_lang.
     """
-    df = ensure_parallelism(df)
-    tok = tokens_expr(F.col(text_col))
-    base = df.filter(F.size(tok) > 0).select(
-        F.col(id_col), F.col(text_col), tok.alias("_tok")
+    # each language's evidence is bound once; the en score doubles as
+    # quality_score's stopword-hit count
+    scored = _tokenized(df, text_col, id_col, text_col).select(
+        F.col(id_col), F.col(text_col), F.col("_tok"), *_lang_scores(F.col("_tok"))
     )
-    # lang_id's two-step ladder: bind each language's evidence once —
-    # the en score doubles as quality_score's stopword-hit count
-    scored = base.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.col("_tok"),
-        *[
-            _stop_hits(F.col("_tok"), words).alias(f"_s_{lang}")
-            for lang, words in LANG_STOPWORDS.items()
-        ],
-    )
-    n_chars = F.length(F.col(text_col))
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), PUNCT_CLASS, ""))
-    n_tok = F.size(F.col("_tok"))
-    punct_ratio = n_punct.cast("double") / n_chars
-    stop_ratio = F.col("_s_en").cast("double") / n_tok
-    score = (
-        F.lit(0.4) * F.least(F.lit(1.0), n_tok.cast("double") / F.lit(100.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-        + F.lit(0.3) * F.least(F.lit(1.0), F.lit(5.0) * stop_ratio)
-    )
-    cjk = F.length(F.col(text_col)) - F.length(
-        F.regexp_replace(F.col(text_col), CJK_CLASS, "")
-    )
-    en, de, fr, es = (F.col(f"_s_{lang}") for lang in ("en", "de", "fr", "es"))
-    pred = (
-        F.when(cjk > 0, "zh")
-        .when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
-        .when((de >= fr) & (de >= es) & (de > 0), "de")
-        .when((fr >= es) & (fr > 0), "fr")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
+    _, pred = _lang_pred(F.col(text_col))
     return scored.select(
         F.col(id_col),
-        n_tok.alias("n_tokens"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
+        *_quality_cols(F.col(text_col), F.col("_tok"), F.col("_s_en")),
         pred.alias("predicted_lang"),
     )
 
@@ -307,12 +285,6 @@ def countmin_counters(
     Hashes are the portable MD5 family so the DuckDB oracle reproduces
     the exact counters.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.hashing import md5_int28
-    from ..functions.text import tokens_expr
-    from ..sources.registry import ensure_parallelism
-
     df = ensure_parallelism(df)
     tok = df.select(F.explode(tokens_expr(F.col(text_col))).alias("token"))
     rows = tok.select(
@@ -371,8 +343,6 @@ def term_distribution_stats(
     Output: <group_col>, n_tokens, n_types, ttr, entropy_bits,
     top{N}_share — one row per group.
     """
-    from pyspark.sql import Window
-
     df = ensure_parallelism(df)
     tok = tokens_expr(F.col(text_col))
     terms = (
@@ -413,6 +383,64 @@ def term_distribution_stats(
     )
 
 
+def _blocklist_hits(
+    tok: Column, lists: dict[str, list[str]], prefix: str
+) -> tuple[list[Column], Column]:
+    """Per-category blocklist hit counts over a bound token array,
+    aliased ``<prefix><cat>_hits`` in sorted category order, and their
+    total, which references those aliases (a next-projection column)."""
+    cats = sorted(lists)
+    hits = []
+    for cat in cats:
+        terms = F.array(*[F.lit(t) for t in lists[cat]])
+        hits.append(
+            # filter-then-size (NOT array_intersect: that dedups, and
+            # hit counts must weight repeated terms)
+            F.size(F.filter(tok, lambda t: F.array_contains(terms, t)))
+            .cast("int")
+            .alias(f"{prefix}{cat}_hits")
+        )
+    bound = [F.col(f"{prefix}{c}_hits") for c in cats]
+    total = sum(bound[1:], bound[0]) if cats else F.lit(0)
+    return hits, total
+
+
+def _gopher_measures(tok: Column, n_words: Column) -> list[Column]:
+    """mean_word_len, symbol_ratio, alpha_word_frac and n_stopwords of
+    :func:`gopher_rules` over a bound token array and its size."""
+    mean_len = F.aggregate(
+        tok, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)
+    ).cast("double") / n_words
+    n_symbols = F.size(
+        F.filter(tok, lambda t: t.contains("#") | t.contains("..."))
+    )
+    alpha_frac = (
+        F.size(F.filter(tok, lambda t: t.rlike("[a-z]"))).cast("double") / n_words
+    )
+    stops = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
+    n_stop = F.size(F.array_intersect(F.array_distinct(tok), stops))
+    return [
+        F.round(mean_len, 6).alias("mean_word_len"),
+        F.round(n_symbols.cast("double") / n_words, 6).alias("symbol_ratio"),
+        F.round(alpha_frac, 6).alias("alpha_word_frac"),
+        n_stop.cast("int").alias("n_stopwords"),
+    ]
+
+
+def _gopher_verdict(n_words: Column) -> tuple[Column, Column]:
+    """The word-count range flag and the keep predicate over bound
+    :func:`_gopher_measures` columns (Rae et al. 2021 thresholds)."""
+    n_words_ok = (n_words >= 50) & (n_words <= 100_000)
+    keep = (
+        (F.col("mean_word_len") >= 3.0)
+        & (F.col("mean_word_len") <= 10.0)
+        & (F.col("symbol_ratio") <= 0.1)
+        & (F.col("alpha_word_frac") >= 0.8)
+        & (F.col("n_stopwords") >= 2)
+    )
+    return n_words_ok, keep
+
+
 def blocklist_filter(
     df: DataFrame,
     id_col: str,
@@ -435,40 +463,17 @@ def blocklist_filter(
     Output: <id_col>, n_tokens, <cat>_hits per category (INT, sorted
     category order), total_hits, hit_ratio (6dp), keep (boolean).
     """
-    from ..functions.text import BLOCKLISTS
-
     lists = blocklists if blocklists is not None else BLOCKLISTS
-    df = ensure_parallelism(df)
-    tok = tokens_expr(F.col(text_col))
-    base = df.filter(F.size(tok) > 0).select(
-        F.col(id_col), tok.alias("_tok")
-    ).select(  # n_tokens off the bound column — not a third tokenize (r13)
-        F.col(id_col), F.col("_tok"), F.size("_tok").alias("n_tokens")
+    base = _tokenized(df, text_col, id_col).select(
+        id_col, "_tok", F.size("_tok").alias("n_tokens")
     )
-    cats = sorted(lists)
-    hit_cols = []
-    for cat in cats:
-        terms = F.array(*[F.lit(t) for t in lists[cat]])
-        hit_cols.append(
-            # filter-then-size (NOT array_intersect: that dedups, and
-            # hit counts must weight repeated terms)
-            F.size(F.filter(F.col("_tok"), lambda t: F.array_contains(terms, t)))
-            .cast("int")
-            .alias(f"{cat}_hits")
-        )
-    scored = base.select(id_col, "n_tokens", *hit_cols)
-    total = sum((F.col(f"{c}_hits") for c in cats[1:]),
-                F.col(f"{cats[0]}_hits")) if cats else F.lit(0)
-    return scored.select(
-        id_col,
-        "n_tokens",
-        *[f"{c}_hits" for c in cats],
+    hits, total = _blocklist_hits(F.col("_tok"), lists, "")
+    ratio = F.round(total.cast("double") / F.col("n_tokens"), 6)
+    return base.select(id_col, "n_tokens", *hits).select(
+        "*",
         total.cast("int").alias("total_hits"),
-        F.round(total.cast("double") / F.col("n_tokens"), 6).alias("hit_ratio"),
-        (
-            F.round(total.cast("double") / F.col("n_tokens"), 6)
-            <= F.lit(max_hit_ratio)
-        ).alias("keep"),
+        ratio.alias("hit_ratio"),
+        (ratio <= F.lit(max_hit_ratio)).alias("keep"),
     )
 
 
@@ -496,47 +501,13 @@ def gopher_rules(
     Output: id, n_words, mean_word_len (6dp), symbol_ratio (6dp),
     alpha_word_frac (6dp), n_stopwords, n_words_ok, keep.
     """
-    from ..functions.text import LANG_STOPWORDS
-
-    df = ensure_parallelism(df)
-    tok = tokens_expr(F.col(text_col))
-    base = df.filter(F.size(tok) > 0).select(
-        F.col(id_col), tok.alias("_tok")
-    ).select(  # n_words off the bound column — not a third tokenize (r13)
-        F.col(id_col), F.col("_tok"), F.size("_tok").alias("n_words")
+    base = _tokenized(df, text_col, id_col).select(
+        id_col, "_tok", F.size("_tok").alias("n_words")
     )
-    tokc = F.col("_tok")
-    mean_len = F.aggregate(
-        tokc, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)
-    ).cast("double") / F.col("n_words")
-    n_symbols = F.size(
-        F.filter(tokc, lambda t: t.contains("#") | t.contains("..."))
-    )
-    alpha_frac = (
-        F.size(F.filter(tokc, lambda t: t.rlike("[a-z]"))).cast("double")
-        / F.col("n_words")
-    )
-    stops = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
-    n_stop = F.size(F.array_intersect(F.array_distinct(tokc), stops))
-    out = base.select(
-        id_col,
-        "n_words",
-        F.round(mean_len, 6).alias("mean_word_len"),
-        F.round(n_symbols.cast("double") / F.col("n_words"), 6).alias("symbol_ratio"),
-        F.round(alpha_frac, 6).alias("alpha_word_frac"),
-        n_stop.cast("int").alias("n_stopwords"),
-    )
-    return out.select(
-        "*",
-        ((F.col("n_words") >= 50) & (F.col("n_words") <= 100_000)).alias("n_words_ok"),
-        (
-            (F.col("mean_word_len") >= 3.0)
-            & (F.col("mean_word_len") <= 10.0)
-            & (F.col("symbol_ratio") <= 0.1)
-            & (F.col("alpha_word_frac") >= 0.8)
-            & (F.col("n_stopwords") >= 2)
-        ).alias("keep"),
-    )
+    nw = F.col("n_words")
+    out = base.select(id_col, "n_words", *_gopher_measures(F.col("_tok"), nw))
+    n_words_ok, keep = _gopher_verdict(nw)
+    return out.select("*", n_words_ok.alias("n_words_ok"), keep.alias("keep"))
 
 
 def safety_signals(
@@ -551,58 +522,23 @@ def safety_signals(
     operators on the id (both filter empty-token rows, so the inner
     join is exactly this row set) but with one tokenize pass and zero
     joins (guide §2.4; the composition's id join shuffles the corpus
-    twice at scale).  Every expression is the same expression the two
-    operators build.
+    twice at scale).  Both operators' columns come from the same
+    builders.
 
     Output: <id_col>, n_words, mean_word_len, symbol_ratio,
     alpha_word_frac, n_stopwords, n_words_ok, gopher_keep,
     total_hits, hit_ratio, blocklist_keep.
     """
-    from ..functions.text import BLOCKLISTS
-
     lists = blocklists if blocklists is not None else BLOCKLISTS
-    df = ensure_parallelism(df)
-    tok = tokens_expr(F.col(text_col))
-    base = (
-        df.filter(F.size(tok) > 0)
-        .select(F.col(id_col), tok.alias("_tok"))
-        .select(F.col(id_col), F.col("_tok"), F.size("_tok").alias("n_words"))
+    base = _tokenized(df, text_col, id_col).select(
+        id_col, "_tok", F.size("_tok").alias("n_words")
     )
-    tokc = F.col("_tok")
     nw = F.col("n_words")
-    mean_len = F.aggregate(
-        tokc, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)
-    ).cast("double") / nw
-    n_symbols = F.size(
-        F.filter(tokc, lambda t: t.contains("#") | t.contains("..."))
-    )
-    alpha_frac = F.size(F.filter(tokc, lambda t: t.rlike("[a-z]"))).cast("double") / nw
-    stops = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
-    n_stop = F.size(F.array_intersect(F.array_distinct(tokc), stops))
-    cats = sorted(lists)
-    hit_cols = []
-    for cat in cats:
-        terms = F.array(*[F.lit(t) for t in lists[cat]])
-        hit_cols.append(
-            F.size(F.filter(tokc, lambda t: F.array_contains(terms, t)))
-            .cast("int")
-            .alias(f"_{cat}_hits")
-        )
-    staged = base.select(
-        F.col(id_col),
-        nw,
-        F.round(mean_len, 6).alias("mean_word_len"),
-        F.round(n_symbols.cast("double") / nw, 6).alias("symbol_ratio"),
-        F.round(alpha_frac, 6).alias("alpha_word_frac"),
-        n_stop.cast("int").alias("n_stopwords"),
-        *hit_cols,
-    )
-    total = (
-        sum((F.col(f"_{c}_hits") for c in cats[1:]), F.col(f"_{cats[0]}_hits"))
-        if cats
-        else F.lit(0)
-    )
-    hit_ratio = F.round(total.cast("double") / nw, 6)
+    measures = _gopher_measures(F.col("_tok"), nw)
+    hits, total = _blocklist_hits(F.col("_tok"), lists, "_")
+    staged = base.select(F.col(id_col), nw, *measures, *hits)
+    n_words_ok, gopher_keep = _gopher_verdict(nw)
+    ratio = F.round(total.cast("double") / nw, 6)
     return staged.select(
         F.col(id_col),
         "n_words",
@@ -610,17 +546,11 @@ def safety_signals(
         "symbol_ratio",
         "alpha_word_frac",
         "n_stopwords",
-        ((nw >= 50) & (nw <= 100_000)).alias("n_words_ok"),
-        (
-            (F.col("mean_word_len") >= 3.0)
-            & (F.col("mean_word_len") <= 10.0)
-            & (F.col("symbol_ratio") <= 0.1)
-            & (F.col("alpha_word_frac") >= 0.8)
-            & (F.col("n_stopwords") >= 2)
-        ).alias("gopher_keep"),
+        n_words_ok.alias("n_words_ok"),
+        gopher_keep.alias("gopher_keep"),
         total.cast("int").alias("total_hits"),
-        hit_ratio.alias("hit_ratio"),
-        (hit_ratio <= F.lit(max_hit_ratio)).alias("blocklist_keep"),
+        ratio.alias("hit_ratio"),
+        (ratio <= F.lit(max_hit_ratio)).alias("blocklist_keep"),
     )
 
 
@@ -672,9 +602,6 @@ def quality_classifier(
     Output: id, n_feats, logit_micro (BIGINT), quality_score (6dp),
     keep (score >= threshold).
     """
-    from ..functions.text import tokens_expr
-    from ..operators.importance import feature_buckets_from_tokens
-
     df = ensure_parallelism(df)
     # Empty-doc filter on the RAW text, not on size(features): the
     # feature array is nonempty iff the text has a non-whitespace char,
@@ -777,8 +704,6 @@ def quality_classifier(
             # element_at per feature instead of an md5 (A/B at sf0.1:
             # 6.8 s → map-only scan cost; same trick as the IVF
             # literal centroids).
-            from ..functions.hashing import md5_int28_py
-
             wvals = [
                 md5_int28_py(str(b)) % 2_000_001 - 1_000_000
                 for b in range(n_buckets)
@@ -842,11 +767,8 @@ def train_quality_weights(
 
     Output: bucket (int), w_micro (BIGINT), pos_count, neg_count.
     """
-    from ..functions.text import tokens_expr
-    from ..operators.importance import feature_buckets_from_tokens
-
     df = ensure_parallelism(df)
-    # token array bound as a column before the feature explode (r13)
+    # token array bound as a column before the feature explode
     feats = df.select(
         F.expr(label_filter).alias("_pos"),
         tokens_expr(F.col(text_col)).alias("_tok"),
@@ -870,25 +792,9 @@ def train_quality_weights(
     nc = F.col("_c") - F.col("_pc")
     return buckets.crossJoin(F.broadcast(totals)).select(
         F.col("_b").cast("int").alias("bucket"),
-        F.round(
-            F.lit(1e6)
-            * F.log(
-                # double arithmetic BEFORE multiplying (bigint products
-                # of corpus-scale counts would overflow at 100 TB); op
-                # order mirrors the oracle SQL token-for-token
-                (
-                    (F.col("_pc") + 1).cast("double")
-                    * (F.col("_nt") + F.lit(n_buckets)).cast("double")
-                )
-                / (
-                    (nc + 1).cast("double")
-                    * (F.col("_pt") + F.lit(n_buckets)).cast("double")
-                )
-            ),
-            0,
-        )
-        .cast("bigint")
-        .alias("w_micro"),
+        log_odds_micro(
+            F.col("_pc"), F.col("_pt"), nc, F.col("_nt"), n_buckets
+        ).alias("w_micro"),
         F.col("_pc").cast("bigint").alias("pos_count"),
         nc.cast("bigint").alias("neg_count"),
     )
@@ -926,8 +832,6 @@ def classifier_auc(
     Output (one row): n_pos, n_neg (BIGINT), auc (6dp DOUBLE; NULL
     when either class is empty — AUC is undefined, not 0).
     """
-    from pyspark.sql import Window
-
     hist = (
         scored.filter(F.col(label_col).isNotNull())
         .groupBy(score_col)

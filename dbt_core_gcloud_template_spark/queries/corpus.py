@@ -16,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import LANG_STOPWORDS
+from ..functions.text import LANG_STOPWORDS, tokens_sql
 from ..operators import chunking, dedup, ranking, text_analysis
 from ..sources.registry import load_table
 from . import register
 
-_TOK = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')"
+_TOK = tokens_sql("text")
 
 
 def _sql_list(words: list[str]) -> str:

@@ -705,10 +705,10 @@ def unpivot_priority_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "array_map_json_functions",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '') AS tok
+             {_TOK} AS tok
       FROM documents
     )
     SELECT doc_id,

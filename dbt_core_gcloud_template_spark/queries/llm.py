@@ -14,13 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_PRIME
-from ..functions.text import LANG_STOPWORDS
+from ..functions.text import LANG_STOPWORDS, tokens_sql
 from ..operators import dedup, multimodal, similarity, text_analysis
 from ..sources.registry import load_table
 from . import register
 
 # --- shared DuckDB fragments (must mirror functions/text.py exactly) -------
-_TOK = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')"
+_TOK = tokens_sql("text")
 
 
 def _sh_sql(tok: str, k: int) -> str:

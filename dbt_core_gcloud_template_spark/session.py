@@ -2,9 +2,10 @@
 
 Defaults chosen for BigQuery-parity correctness and 100 TB-scale habits:
 
-- ``spark.sql.session.timeZone=UTC``: BigQuery TIMESTAMP is always UTC
-  (SURVEY.md §7.5); every timestamp comparison against the oracle
-  assumes this.
+- The SQL confs our semantics depend on (UTC session timeZone, parquet
+  nanos and timestamp inference, excluded optimizer rules) are set by
+  ``sources.registry.ensure_session_confs``, which also runs on
+  sessions built elsewhere.
 - AQE on (+ coalesce partitions + skew join): at scale the static
   shuffle-partition count is always wrong for somebody; AQE re-plans
   from runtime stats.
@@ -20,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .sources.registry import ensure_session_confs
 
 
 def cpu_count() -> int:
@@ -41,7 +44,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -51,24 +53,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # The testdata events table carries parquet TIMESTAMP(NANOS), which
-        # Spark has no native type for; read as epoch-nanos long and convert
-        # at the source layer (sources/registry.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Read parquet timestamps as TIMESTAMP (UTC instant), not
-        # TIMESTAMP_NTZ — BigQuery-parity: TIMESTAMP is always UTC.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # See sources/registry.py:ensure_session_confs — inferred
-        # size>0/isnotnull filters re-evaluate expensive generator
-        # expressions (shingles, band hashes) 3x per row.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_session_confs(spark)
+    return spark

@@ -3497,3 +3497,53 @@ def test_compact_count_deltas_preserves_fold_and_tags(spark):
     lower = compact_count_deltas(compacted, through_lo=100)
     assert stored_compact_horizon(lower) == 340
     assert lower.filter(F.col("spec_hash") == HORIZON_SPEC).count() == 1
+
+
+def test_fused_curation_signals_equal_their_compositions(spark, sf_dir):
+    """The fused operators the curation DAG runs equal, row for row,
+    the id joins of the single-signal operators they fuse, over the
+    documents table plus NULL, empty, whitespace-only, CJK-only,
+    symbol-heavy and mixed-case-stopword rows."""
+    from dbt_core_gcloud_template_spark.operators import text_analysis as ta
+    from dbt_core_gcloud_template_spark.sources.registry import load_table
+
+    dirty = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, ""),
+            (-3, " \t\n  "),
+            (-4, "数据处理中文文本"),
+            (-5, "# ... # ... #"),
+            (-6, "The AND of THE Der und LA y Le et"),
+        ],
+        "doc_id long, text string",
+    )
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .unionByName(dirty)
+    )
+
+    def rows(df):
+        return df.columns, sorted(df.collect(), key=lambda r: r["doc_id"])
+
+    composed = ta.quality_score(docs, "doc_id", "text").join(
+        ta.lang_id(docs, "doc_id", "text").select("doc_id", "predicted_lang"),
+        "doc_id",
+    )
+    fused = ta.quality_lang_signals(docs, "doc_id", "text")
+    cols, got = rows(fused)
+    assert (cols, got) == rows(composed)
+    assert {-4, -5, -6} <= {r["doc_id"] for r in got}
+
+    gopher = ta.gopher_rules(docs, "doc_id", "text")
+    composed = gopher.withColumnRenamed("keep", "gopher_keep").join(
+        ta.blocklist_filter(docs, "doc_id", "text").select(
+            "doc_id", "total_hits", "hit_ratio", F.col("keep").alias("blocklist_keep")
+        ),
+        "doc_id",
+    )
+    fused = ta.safety_signals(docs, "doc_id", "text")
+    cols, got = rows(fused)
+    assert (cols, got) == rows(composed)
+    assert {-4, -5, -6} <= {r["doc_id"] for r in got}
