@@ -265,16 +265,14 @@ def lsh_candidate_pairs(
         .filter(F.size("ids") >= 2)
     )
     if max_bucket_size is not None:
-        # Armed telemetry pins the bucket frame so the fence count and
-        # the pair expansion share one computation (telemetry.py).
-        grouped = telemetry.pin_if_armed(grouped)
-        telemetry.record_fence(
+        # Armed telemetry pins the bucket frame and counts the fenced
+        # buckets on the same job (telemetry.py).
+        grouped = telemetry.checkpoint_fenced(
+            grouped,
             "lsh_candidate_pairs",
             "max_bucket_size",
-            grouped.filter(F.size("ids") > max_bucket_size).select(
-                F.size("ids").alias("_sz")
-            ),
-            rows_col="_sz",
+            over=F.size("ids") > max_bucket_size,
+            rows=F.size("ids"),
         )
         grouped = grouped.filter(F.size("ids") <= max_bucket_size)
     ids = F.col("ids")
@@ -346,14 +344,12 @@ def lsh_incremental_pairs(
         .filter(F.col("_any_new") & (F.size("ids") >= 2))
     )
     if max_bucket_size is not None:
-        grouped = telemetry.pin_if_armed(grouped)
-        telemetry.record_fence(
+        grouped = telemetry.checkpoint_fenced(
+            grouped,
             "lsh_incremental_pairs",
             "max_bucket_size",
-            grouped.filter(F.size("ids") > max_bucket_size).select(
-                F.size("ids").alias("_sz")
-            ),
-            rows_col="_sz",
+            over=F.size("ids") > max_bucket_size,
+            rows=F.size("ids"),
         )
         grouped = grouped.filter(F.size("ids") <= max_bucket_size)
     ids = F.col("ids")
@@ -743,7 +739,8 @@ def canonical_ids(
     a fixpoint — connected components — which is an offline driver
     loop, not a plan change).
 
-    Output: <id_col>, canonical_id, is_duplicate.
+    Output: the columns of ``docs``, canonical_id, is_duplicate — pass
+    ``docs.select(id_col)`` for the ids alone.
     """
     # Aggregate the pair set FIRST (one shuffle of pair rows — tiny
     # relative to the corpus), then join the per-member minimum onto
@@ -757,10 +754,9 @@ def canonical_ids(
         .agg(F.min("_cand").alias("_cand"))
     )
     return (
-        docs.select(F.col(id_col))
-        .join(mins, F.col(id_col) == F.col("_member"), "left")
+        docs.join(mins, F.col(id_col) == F.col("_member"), "left")
         .select(
-            id_col,
+            *docs.columns,
             F.coalesce(F.col("_cand"), F.col(id_col))
             .cast("bigint")
             .alias("canonical_id"),

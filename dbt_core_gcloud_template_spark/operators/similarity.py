@@ -18,6 +18,8 @@ Two tiers:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -77,6 +79,15 @@ def _norm(a):
     return F.sqrt(
         F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     )
+
+
+def _norm_py(vec) -> float:
+    """Driver-side :func:`_norm`: the same sequential fold from 0.0,
+    so the double is bit-identical to the column expression's."""
+    acc = 0.0
+    for x in vec:
+        acc += x * x
+    return math.sqrt(acc)
 
 
 def _cos_div(num, den):
@@ -369,25 +380,76 @@ def label_centroids(
     )
 
 
+def _stage_centroids(
+    base: DataFrame,
+    centroids: "list[list[float]] | DataFrame",
+    max_literal_centroids: int = MAX_LITERAL_CENTROIDS,
+    with_norm: bool = False,
+) -> DataFrame:
+    """Append ``_cents`` = the codebook as an array of ``(c_id, _cv)``
+    structs sorted by ``c_id`` (plus the centroid norm ``_cn`` when
+    ``with_norm``) to every row of ``base``.
+
+    ``centroids`` is either the in-memory ``k x dim`` list (c_id = list
+    index) or a centroid table with columns ``c_id``, ``_cv``.  A list
+    of at most ``max_literal_centroids`` doubles rides the plan as ONE
+    parsed literal expression (see :func:`_sql_double`); a larger list
+    or a table travels as a one-row broadcast instead — the
+    bloom-bitmap trick: big constants travel as DATA, not as plan
+    literals.  Literal norms use the same sequential fold as
+    :func:`_norm`, so the arithmetic is bit-identical either way.
+    """
+    if isinstance(centroids, DataFrame):
+        cents_df = centroids
+    else:
+        if not centroids:
+            raise ValueError(
+                "centroids must be non-empty — an empty model cannot "
+                "define an assignment"
+            )
+        if len(centroids) * len(centroids[0]) <= max_literal_centroids:
+
+            def entry(i, c):
+                norm = f",'_cn',{_sql_double(_norm_py(c))}" if with_norm else ""
+                return f"named_struct('c_id',{int(i)},'_cv',{_sql_double_array(c)}{norm})"
+
+            cents = ",".join(entry(i, c) for i, c in enumerate(centroids))
+            return base.withColumn("_cents", F.expr(f"array({cents})"))
+        cents_df = base.sparkSession.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+            "c_id int, _cv array<double>",
+        )
+    fields = [F.col("c_id"), F.col("_cv")]
+    if with_norm:
+        fields.append(_norm(F.col("_cv")).alias("_cn"))
+    packed = cents_df.agg(
+        F.array_sort(F.collect_list(F.struct(*fields))).alias("_cents")
+    )
+    return base.crossJoin(F.broadcast(packed))
+
+
 def _with_nearest_list(
     base: DataFrame,
-    cents: DataFrame,
+    centroids: "list[list[float]] | DataFrame",
     vec_col: str = "_v",
     list_col: str = "list_id",
+    max_literal_centroids: int = MAX_LITERAL_CENTROIDS,
 ) -> DataFrame:
     """Append ``list_col`` = id of the max-cosine centroid (6dp-rounded
     cosine, ties to the lower centroid id — the ivf_assign discipline)
     to ``base`` (which carries the vector as ``vec_col``) as a MAP-ONLY
-    pass: the centroid table (columns ``c_id``, ``_cv``) packs into one
-    broadcast row of (c_id, vector, norm) structs and each corpus row
-    takes an argmin over the packed array.
+    pass: the codebook (a ``k x dim`` list, or a table with columns
+    ``c_id``, ``_cv``) is staged onto every row with its norms by
+    :func:`_stage_centroids` — literals or one broadcast row, the rule
+    :func:`_nearest_centroid` uses — and each corpus row takes an
+    argmin over the staged array.
 
     This replaces the earlier crossJoin → row_number() formulation,
     which materialized corpus × k rows and hash-shuffled ALL of them by
     id for the window (guide §2.4: remove shuffles outright).  The
     cosine arithmetic is bit-identical: same sequential fold order per
-    pair, and the centroid norm is computed once in the broadcast with
-    the same fold the per-pair expression used.
+    pair, and each centroid norm is computed once with the same fold
+    the per-pair expression used.
 
     Ordering parity with ``ORDER BY round(cos, 6) DESC, c_id``
     including degenerate rows: NaN cosines sort FIRST (desc puts NaN
@@ -400,20 +462,9 @@ def _with_nearest_list(
     the k per-centroid cosines share one fold) survives on the output —
     callers that need the norm reuse it; others drop it.
     """
-    packed = cents.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("c_id"),
-                    F.col("_cv"),
-                    _norm(F.col("_cv")).alias("_cn"),
-                )
-            )
-        ).alias("_acents")
-    )
-    staged = base.crossJoin(F.broadcast(packed)).withColumn(
-        "_nv", _norm(F.col(vec_col))
-    )
+    staged = _stage_centroids(
+        base, centroids, max_literal_centroids, with_norm=True
+    ).withColumn("_nv", _norm(F.col(vec_col)))
 
     def _entry(s):
         rcos = F.round(
@@ -429,12 +480,41 @@ def _with_nearest_list(
             s["c_id"].alias("_c"),
         )
 
-    best = F.array_min(F.transform(F.col("_acents"), _entry))
+    best = F.array_min(F.transform(F.col("_cents"), _entry))
     return (
-        staged.filter(F.size(F.col("_acents")) > 0)
+        staged.filter(F.size(F.col("_cents")) > 0)
         .withColumn(list_col, best["_c"])
-        .drop("_acents")
+        .drop("_cents")
     )
+
+
+def _centroid_source(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_lists: int,
+    centroids: "list[list[float]] | DataFrame | None",
+) -> "list[list[float]] | DataFrame":
+    """The codebook :func:`_with_nearest_list` assigns against: a
+    ``k x dim`` list as given, a stored ``(c_id, vector)`` table as
+    ``(c_id, _cv)``, or — for ``None`` — the ``n_lists`` smallest-id
+    vectors as the stand-in.  The stand-in reads a DIRECT pruned scan
+    of ``emb``, not the caller's ``ensure_parallelism`` frame: building
+    the packed broadcast from that frame would execute its round-robin
+    exchange — a corpus shuffle to select n_lists rows.  The id
+    predicate pushes into the parquet reader; rows and cast are
+    identical."""
+    if centroids is None:
+        return emb.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        ).filter(F.col(id_col) < n_lists).select(
+            F.col(id_col).alias("c_id"), F.col("_v").alias("_cv")
+        )
+    if isinstance(centroids, DataFrame):
+        return centroids.select(
+            F.col("c_id"), F.col("vector").cast("array<double>").alias("_cv")
+        )
+    return centroids
 
 
 def ivf_assign(
@@ -462,22 +542,7 @@ def ivf_assign(
     base = ensure_parallelism(emb).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("c_id"),
-            F.col("vector").cast("array<double>").alias("_cv"),
-        )
-    else:
-        # stand-in centroids from a DIRECT pruned scan, not `base`
-        # (r14): building the packed broadcast otherwise executes the
-        # ensure_parallelism round-robin exchange — a corpus shuffle to
-        # select n_lists rows.  The id predicate pushes into the
-        # parquet reader; rows and cast are identical.
-        cents = emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        ).filter(F.col(id_col) < n_lists).select(
-            F.col(id_col).alias("c_id"), F.col("_v").alias("_cv")
-        )
+    cents = _centroid_source(emb, id_col, vec_col, n_lists, centroids)
     return _with_nearest_list(base, cents).select(F.col(id_col), "list_id")
 
 
@@ -522,8 +587,6 @@ def ivf_topk(
 
     Output: q_id, <id_col>, cosine (6dp), rank.
     """
-    import math
-
     base0 = (
         ensure_parallelism(_valid_vectors(emb, id_col, vec_col))
         .select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
@@ -606,7 +669,7 @@ def ivf_topk(
                             # centroid as ONE parsed expression, not
                             # dim F.lit round trips (see _sql_double)
                             _dot(F.col("_v"), F.expr(_sql_double_array(r["_v"]))),
-                            nv * F.lit(math.sqrt(sum(x * x for x in r["_v"]))),
+                            nv * F.lit(_norm_py(r["_v"])),
                         ),
                         6,
                     ).alias("cos"),
@@ -623,7 +686,7 @@ def ivf_topk(
                     (
                         int(r[0]),
                         [float(x) for x in r["_v"]],
-                        math.sqrt(sum(x * x for x in r["_v"])),
+                        _norm_py(r["_v"]),
                     )
                     for r in cent_rows
                 ],
@@ -821,21 +884,21 @@ def embedding_near_dup_incremental(
     left = _side(new, True, "a")
     right = _side(new, True, "b").unionByName(_side(old, False, "b"))
     if max_bucket_size is not None:
-        # hot feeds the telemetry count plus TWO broadcast anti-joins;
-        # armed telemetry pins it so the old-side count-agg runs once.
-        hot = telemetry.pin_if_armed(
-            _side(old, False, "b")
-            .groupBy("_bktb")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
+        # the bucket counts feed the telemetry count plus TWO broadcast
+        # anti-joins; armed telemetry pins them (counting the fenced
+        # buckets on the same job) so the old-side count-agg runs once.
+        over = F.col("count") > max_bucket_size
+        hot = (
+            telemetry.checkpoint_fenced(
+                _side(old, False, "b").groupBy("_bktb").count(),
+                "embedding_near_dup_incremental",
+                "max_bucket_size",
+                over=over,
+                rows=F.col("count"),
+            )
+            .filter(over)
+            .select("_bktb")
         )
-        telemetry.record_fence(
-            "embedding_near_dup_incremental",
-            "max_bucket_size",
-            hot,
-            rows_col="count",
-        )
-        hot = hot.select("_bktb")
         right = right.join(F.broadcast(hot), "_bktb", "left_anti")
         left = left.join(
             F.broadcast(hot.withColumnRenamed("_bktb", "_bkta")),
@@ -959,8 +1022,6 @@ def random_projection(
 
     Output: <id_col>, proj_dim (0-based), value (6dp).
     """
-    import math
-
     signs = rademacher_signs(out_dim, dim)
     scale = 1.0 / math.sqrt(out_dim)
     v = F.col(vec_col).cast("array<double>")
@@ -1072,47 +1133,12 @@ def _nearest_centroid(
     if isinstance(centroids, DataFrame):
         # assumed non-empty (a trained codebook); an empty table would
         # yield NULL assignments, not an error — validate upstream
-        cents_df = centroids.select(
+        centroids = centroids.select(
             F.col("c_id").cast("int").alias("c_id"),
             F.col("vector").cast("array<double>").alias("_cv"),
         )
-        n_literals = None
-    else:
-        if not centroids:
-            raise ValueError(
-                "centroids must be non-empty — an empty model cannot "
-                "define an assignment"
-            )
-        n_literals = len(centroids) * len(centroids[0])
-    if n_literals is not None and n_literals <= max_literal_centroids:
-        # one parsed expression string instead of k×dim F.lit round
-        # trips (see _sql_double) — the analyzed literal array is
-        # identical to the DSL construction
-        cents_col = F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('c_id',{int(i)},'_cv',{_sql_double_array(c)})"
-                for i, c in enumerate(centroids)
-            )
-            + ")"
-        )
-        staged = base.withColumn("_cents", cents_col)
-    else:
-        if n_literals is not None:
-            spark = base.sparkSession
-            cents_df = spark.createDataFrame(
-                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-                "c_id int, _cv array<double>",
-            )
-        # one row holding the sorted (c_id, vector) struct array —
-        # the bloom-bitmap trick: big constants travel as broadcast
-        # DATA, not as plan literals
-        packed = cents_df.agg(
-            F.array_sort(F.collect_list(F.struct("c_id", "_cv"))).alias(
-                "_cents"
-            )
-        )
-        staged = base.crossJoin(F.broadcast(packed))
+    staged = _stage_centroids(base, centroids, max_literal_centroids)
+
     def _entry(s):
         d = F.aggregate(
             F.zip_with(
@@ -1142,12 +1168,15 @@ def kmeans_fit(
     IVF training job that ``ivf_assign``'s stand-in centroids model).
 
     Each iteration is two DataFrame passes, both scale-safe:
-      1. assignment — broadcast the k centroids, per-row top-1 by
-         squared L2 (map-only; no corpus shuffle);
-      2. update — posexplode to (cluster, dim, value) and aggregate
-         per-dimension means in ONE groupBy (k*dim result rows).
+      1. assignment — the k centroids ride the scan (literals or one
+         broadcast row), per-row top-1 by squared L2 (map-only; no
+         corpus shuffle);
+      2. update — ONE wide aggregate keyed on the cluster, dim AVG
+         columns per row (k result rows).
     Only the k x dim centroid matrix ever reaches the driver — the
-    standard k-means driver loop, legitimate at any corpus size.
+    standard k-means driver loop, legitimate at any corpus size.  The
+    returned list can feed :func:`semdedup` / :func:`kmeans_assign`
+    directly, so the codebook never round-trips through a table.
 
     Deterministic: sample-based farthest-point init (ONE corpus pass —
     see ``_kcenter_init_sample``; the earlier formulation ran one full
@@ -1225,7 +1254,7 @@ def kmeans_fit_replayable(
 ) -> DataFrame:
     """Lloyd's k-means whose every step is bit-reproducible in ANSI SQL
     — the trainer behind the oracle-gated ``embedding_semdedup_trained``
-    registry entry (r8 verdict #2): a DuckDB oracle can unroll the same
+    registry entry: a DuckDB oracle can unroll the same
     ``n_iter`` iterations and land on the exact same codebook, so the
     full SemDeDup-with-training path sits under the driver's value-hash
     gate instead of a rows-only check.
@@ -1328,39 +1357,36 @@ def kmeans_fit_replayable(
     )
 
 
-def build_codebook(
+def codebook_centroids(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
     mode: str = "trained",
     k: int = 8,
     iters: int = 2,
-) -> DataFrame:
+) -> "list[list[float]] | DataFrame":
     """Vars-selectable codebook construction for DAG semantic tiers —
-    ONE implementation shared by the demo projects (r9 review: the
-    trained/standin switch had drifted into two near-copies).
+    ONE implementation shared by the demo projects.
 
     - ``trained``: :func:`kmeans_fit` (distributed Lloyd's, ``iters``
-      iterations) over ``emb``; raises on an empty corpus (an
-      undefined model is an actionable error, per the library rule).
-    - ``standin``: the ``k`` smallest-id VALID vectors — the
-      zero-training deterministic fallback; degrades to fewer rows on
-      a tiny corpus.  Validity-filtered like the trained path (a NULL
-      or zero-norm row among the smallest ids must not become a
-      centroid: downstream cosine assignment would try_divide into
-      NULLs for every corpus row) and re-indexed to c_id 0..k-1 like
-      the trained path — NOT the raw id, which silently overflows an
-      int cast for ids >= 2^31.
+      iterations) over ``emb``, returned as the ``k x dim`` list the
+      trainer already holds on the driver; raises on an empty corpus
+      (an undefined model is an actionable error, per the library
+      rule).
+    - ``standin``: the ``k`` smallest-id VALID vectors as a ``(c_id,
+      vector)`` table — the zero-training deterministic fallback;
+      degrades to fewer rows on a tiny corpus.  Validity-filtered like
+      the trained path (a NULL or zero-norm row among the smallest ids
+      must not become a centroid: downstream cosine assignment would
+      try_divide into NULLs for every corpus row) and re-indexed to
+      c_id 0..k-1 like the trained path — NOT the raw id, which
+      silently overflows an int cast for ids >= 2^31.
 
-    Output: c_id (int), vector (array<double>) — the shape
-    :func:`ivf_assign` / :func:`semdedup` accept as ``centroids``.
+    Either form is what :func:`semdedup` accepts as ``centroids``;
+    :func:`build_codebook` is the table form for stages that store it.
     """
     if mode == "trained":
-        fitted = kmeans_fit(emb, id_col, vec_col, k=k, max_iter=iters)
-        return emb.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(fitted)],
-            "c_id int, vector array<double>",
-        )
+        return kmeans_fit(emb, id_col, vec_col, k=k, max_iter=iters)
     if mode == "standin":
         picked = (
             _valid_vectors(emb, id_col, vec_col)
@@ -1380,6 +1406,28 @@ def build_codebook(
         )
     raise ValueError(
         f"codebook mode must be 'trained' or 'standin', got {mode!r}"
+    )
+
+
+def build_codebook(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    mode: str = "trained",
+    k: int = 8,
+    iters: int = 2,
+) -> DataFrame:
+    """:func:`codebook_centroids` as a table — the shape a stage stores
+    and :func:`ivf_assign` / :func:`semdedup` accept as ``centroids``.
+
+    Output: c_id (int), vector (array<double>).
+    """
+    cents = codebook_centroids(emb, id_col, vec_col, mode=mode, k=k, iters=iters)
+    if isinstance(cents, DataFrame):
+        return cents
+    return emb.sparkSession.createDataFrame(
+        [(i, c) for i, c in enumerate(cents)],
+        "c_id int, vector array<double>",
     )
 
 
@@ -1409,6 +1457,21 @@ def kmeans_assign(
     )
 
 
+def _check_cluster_fence(
+    max_cluster_size: int | None, on_oversize: str, dim: int | None
+) -> None:
+    """Validate the SemDeDup fence arguments before any Spark work, so a
+    bad call raises without running (or reporting) the fence."""
+    if max_cluster_size is None:
+        return
+    if on_oversize not in ("drop", "split"):
+        raise ValueError(
+            f"on_oversize must be 'drop' or 'split', got {on_oversize!r}"
+        )
+    if on_oversize == "split" and dim is None:
+        raise ValueError("dim is required for on_oversize='split'")
+
+
 def _fence_clusters(
     v: DataFrame,
     operator: str,
@@ -1418,50 +1481,48 @@ def _fence_clusters(
     dim: int | None,
     count_cond=None,
 ):
-    """Shared ``max_cluster_size`` fence for the SemDeDup family.
+    """Shared ``max_cluster_size`` fence for the SemDeDup family
+    (arguments checked by :func:`_check_cluster_fence`).
 
     ``v`` is the checkpointed (vector ``_v``, norm, ``list_id``
     [, ``_new``]) frame; ``count_cond`` restricts which rows count
     toward the cap (the incremental path counts the STORED side only).
+    The over-cap lists are collected to the driver — at most
+    ``n_lists`` rows, a bound set by the codebook, not the corpus — and
+    the fence is reported from those rows through :mod:`.telemetry`.
     Returns ``(frame, join_keys)``: under ``"drop"`` the over-cap
     lists leave the frame and pairing stays keyed on ``list_id``;
     under ``"split"`` hot-list members gain a ``_sub`` sign-bucket
     (healthy lists get sub-bucket 0) and pairing is keyed on
-    (list_id, _sub).  Either way the fence is reported through
-    :mod:`.telemetry`.
+    (list_id, _sub).  With no over-cap list the frame is unchanged.
     """
     if max_cluster_size is None:
         return v, ["list_id"]
-    if on_oversize not in ("drop", "split"):
-        raise ValueError(
-            f"on_oversize must be 'drop' or 'split', got {on_oversize!r}"
-        )
     counted = v if count_cond is None else v.filter(count_cond)
-    # hot feeds the telemetry count plus the fence join; armed
-    # telemetry pins it so the count-agg over v runs once.
-    hot = telemetry.pin_if_armed(
+    hot = (
         counted.groupBy("list_id")
         .count()
         .filter(F.col("count") > max_cluster_size)
+        .collect()
     )
-    fence = (
-        "max_cluster_size"
-        if on_oversize == "drop"
-        else "max_cluster_size:split"
+    telemetry.record_counts(
+        operator,
+        "max_cluster_size" if on_oversize == "drop" else "max_cluster_size:split",
+        len(hot),
+        sum(r["count"] for r in hot),
     )
-    telemetry.record_fence(operator, fence, hot, rows_col="count")
-    hot = hot.select("list_id")
+    if not hot:
+        return v, ["list_id"]
+    # a NULL list id is never hot: it pairs with nothing either way
+    is_hot = F.coalesce(
+        F.col("list_id").isin([r["list_id"] for r in hot]), F.lit(False)
+    )
     if on_oversize == "drop":
-        return v.join(F.broadcast(hot), "list_id", "left_anti"), ["list_id"]
-    if dim is None:
-        raise ValueError("dim is required for on_oversize='split'")
-    marked = v.join(
-        F.broadcast(hot.withColumn("_hot", F.lit(True))), "list_id", "left"
-    )
+        return v.filter(~is_hot), ["list_id"]
     sub = F.when(
-        F.col("_hot"), _bucket_expr(F.col("_v"), split_planes, dim)
+        is_hot, _bucket_expr(F.col("_v"), split_planes, dim)
     ).otherwise(F.lit(0).cast("bigint"))
-    return marked.withColumn("_sub", sub).drop("_hot"), ["list_id", "_sub"]
+    return v.withColumn("_sub", sub), ["list_id", "_sub"]
 
 
 def semdedup(
@@ -1474,7 +1535,7 @@ def semdedup(
     on_oversize: str = "drop",
     split_planes: int = 4,
     dim: int | None = None,
-    centroids: DataFrame | None = None,
+    centroids: "list[list[float]] | DataFrame | None" = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings, then exact cosine pairing
@@ -1484,10 +1545,16 @@ def semdedup(
     This is the scale path for embedding dedup: the all-pairs cost
     drops from O(n²) to O(Σ |cluster|²) ≈ O(n²/k) — the paper's whole
     trick — and the within-cluster join is an equi-join on ``list_id``
-    so nothing but same-cluster rows ever meet.  Assignment reuses
-    :func:`ivf_assign` (broadcast centroids, no corpus shuffle); the
-    final keep/drop resolution reuses :func:`dedup.canonical_ids`
-    (aggregate-then-join min-propagation).
+    so nothing but same-cluster rows ever meet.  Assignment is a
+    map-only argmin on the same pass that materializes the vectors
+    (:func:`_with_nearest_list`); the final keep/drop resolution reuses
+    :func:`dedup.canonical_ids` (aggregate-then-join min-propagation).
+
+    ``centroids``: the codebook — a ``k x dim`` list as
+    :func:`kmeans_fit` returns it (plan literals, or one broadcast row
+    above ``MAX_LITERAL_CENTROIDS``), a stored ``(c_id, vector)`` table
+    (one broadcast row), or ``None`` for the ``n_lists`` smallest-id
+    vectors as a stand-in.
 
     Skew fence — ``max_cluster_size``: the O(n²/k) shape assumes the
     clustering balances; a degenerate cluster (a bad centroid, or a
@@ -1519,27 +1586,12 @@ def semdedup(
     max_cluster_size = _resolve_fence(
         "max_cluster_size", max_cluster_size, "semdedup"
     )
+    _check_cluster_fence(max_cluster_size, on_oversize, dim)
     emb = _valid_vectors(emb, id_col, vec_col)
     base = ensure_parallelism(emb).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    # pass a STORED centroid table (the ingest job's training artifact,
-    # or any deterministic selection) when the id<n_lists stand-in
-    # isn't meaningful — e.g. a filtered corpus whose smallest ids were
-    # removed upstream
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("c_id"), F.col("vector").cast("array<double>").alias("_cv")
-        )
-    else:
-        # pruned scan, not `base` — avoids executing the
-        # ensure_parallelism exchange inside the packed-centroid
-        # broadcast build (r14; same rows, same cast)
-        cents = emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        ).filter(F.col(id_col) < n_lists).select(
-            F.col(id_col).alias("c_id"), F.col("_v").alias("_cv")
-        )
+    cents = _centroid_source(emb, id_col, vec_col, n_lists, centroids)
     # Materialize (vector, norm, list) ONCE: the within-cluster self-
     # join has no cross-consumer exchange reuse in Catalyst, so without
     # the checkpoint the whole assignment pipeline executes twice; and
@@ -1574,11 +1626,7 @@ def semdedup(
         .filter(F.col("_cos") >= threshold)
         .select("a_id", "b_id")
     )
-    return (
-        canonical_ids(v.select(id_col), pairs, id_col)
-        .join(v.select(id_col, "list_id"), id_col)
-        .select(id_col, "list_id", "canonical_id", "is_duplicate")
-    )
+    return canonical_ids(v.select(id_col, "list_id"), pairs, id_col)
 
 
 def semdedup_recall_eval(
@@ -1732,8 +1780,8 @@ def semdedup_incremental(
     (within its cluster, >= threshold) with ANY stored vector — the
     stored copy is the kept one regardless of id order — or with a
     smaller-id vector of its own batch; ``canonical_id`` is the minimum
-    such partner.  Cluster assignment reuses the deterministic
-    broadcast-centroid pass (:func:`ivf_assign`).  Pass the STORED
+    such partner.  Cluster assignment is the same map-only argmin
+    semdedup runs (:func:`_with_nearest_list`).  Pass the STORED
     centroid table as ``centroids`` (the production shape — the
     training artifact from the ingest job) so verdicts are stable
     against the stored corpus; the id<n_lists stand-in over new ∪ old
@@ -1768,6 +1816,7 @@ def semdedup_incremental(
     max_cluster_size = _resolve_fence(
         "max_cluster_size", max_cluster_size, "semdedup_incremental"
     )
+    _check_cluster_fence(max_cluster_size, on_oversize, dim)
     new = _valid_vectors(emb_new, id_col, vec_col)
     old = _valid_vectors(emb_old, id_col, vec_col)
     tagged = new.withColumn("_new", F.lit(True)).unionByName(
@@ -1778,24 +1827,12 @@ def semdedup_incremental(
         F.col(vec_col).cast("array<double>").alias("_v"),
         F.col("_new"),
     )
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("c_id"), F.col("vector").cast("array<double>").alias("_cv")
-        )
-    else:
-        # pruned union scan, not `base` (r14): the id predicate pushes
-        # into both side scans instead of paying the round-robin
-        # exchange inside the broadcast build
-        cents = tagged.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        ).filter(F.col(id_col) < n_lists).select(
-            F.col(id_col).alias("c_id"), F.col("_v").alias("_cv")
-        )
+    cents = _centroid_source(tagged, id_col, vec_col, n_lists, centroids)
     # one materialization of (vector, norm, list, tag) — the semdedup
     # checkpoint trick; the batch side filters off it for free.  The
     # assignment rides the same map-only pass (inline argmin over the
-    # packed broadcast centroids; ``_nv`` doubles as the norm) instead
-    # of the former ivf_assign + join-back-by-id pair of shuffles.
+    # staged centroids; ``_nv`` doubles as the norm) instead of the
+    # former ivf_assign + join-back-by-id pair of shuffles.
     v = (
         _with_nearest_list(base, cents)
         .select(

@@ -11,32 +11,25 @@ fence must be VISIBLE, or "covered everything" silently becomes
 "covered everything except the boilerplate that mattered".
 
 This module is the reporting channel.  It is deliberately passive:
+when no collector is active (the default — every registry query, the
+bench, the driver) every call here is a no-op that costs one attribute
+lookup, the operators' plans are unchanged and no extra Spark job
+runs.  When a collector IS active (the engine runner opens one around
+each node), the fenced groups and their member rows are counted and
+the engine writes the records into ``run_results.json`` next to the
+node's status.
 
-- When no collector is active (the default — every registry query,
-  the bench, the driver), ``record_fence`` is a no-op that costs one
-  attribute lookup; the operators' plans are unchanged and no extra
-  Spark job runs.
-- When a collector IS active (the engine runner opens one around
-  each node), ``record_fence`` EAGERLY counts the fenced groups and
-  their member rows, and the engine writes the records into
-  ``run_results.json`` next to the node's status.
+What an armed fence costs, per tier:
 
-What an armed fence costs, honestly:
-
-- **Bucket-tier sites** (LSH band buckets, sign-bucket joins, the
-  SemDeDup cluster-size fence) pass their grouped frame through
-  :func:`pin_if_armed` first, so the telemetry aggregate and the
-  downstream fence filter both read ONE materialized computation —
-  arming the collector adds the localCheckpoint write/read of the
-  grouped frame, not a second upstream pass.
-- **Window-tier sites** (the ``max_occurrences`` fences in the
-  span/passage families) enforce the cap inside the main job's
-  WindowExec; their telemetry frame is a separate aggregate branch
-  whose input re-enumerates the corpus windows.  Arming the
-  collector there adds ONE extra pass over the enumerated windows
-  per fence site — pinning the exploded corpus to avoid it would
-  materialize every k-gram, which costs more than the pass.  Each
-  such operator's docstring repeats this.
+- **bucket** (LSH band buckets, sign-bucket joins —
+  :func:`checkpoint_fenced`): the pin's eager checkpoint job only; the
+  counts ride that job as observed metrics.
+- **cluster** (the SemDeDup ``max_cluster_size`` fence): one collect
+  of at most ``n_lists`` rows, which the fence runs armed or not
+  (:func:`record_counts`).
+- **window** (the span/passage ``max_occurrences`` fences —
+  :func:`record_fence`): one extra enumeration pass per site; pinning
+  the exploded corpus instead would materialize every k-gram.
 
 Collectors are thread-local: the engine executes DAG nodes on a
 thread pool and each node's operator calls happen on its own worker
@@ -45,20 +38,24 @@ thread, so records can't bleed between concurrently-running nodes.
 
 from __future__ import annotations
 
+import itertools
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "FenceTelemetry",
     "active",
-    "pin_if_armed",
+    "checkpoint_fenced",
+    "record_counts",
     "record_fence",
     "record_metric",
 ]
 
 _tls = threading.local()
+# observed-metric names must be unique within a plan; one per call
+_observation_ids = itertools.count()
 
 
 class FenceTelemetry:
@@ -73,7 +70,7 @@ class FenceTelemetry:
 
     def __init__(self) -> None:
         self.records: list[dict] = []
-        # named scalar metrics (r8 verdict #3): diagnostics stages
+        # named scalar metrics: diagnostics stages
         # (recall/precision evals) report through the same per-node
         # channel as the fences, landing in run_results next to them.
         # Values are Optional by contract: record_metric(None) stores a
@@ -98,48 +95,65 @@ def active() -> FenceTelemetry | None:
     return stack[-1] if stack else None
 
 
-def pin_if_armed(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` (eager localCheckpoint) when a collector is
-    active, so the telemetry aggregate and the downstream fence filter
-    share one computation instead of each re-running the upstream
-    pipeline.  No collector ⇒ returns ``df`` untouched — the
-    driver/bench path keeps its plan byte-identical.  Call this on the
-    grouped frame that BOTH consumers derive from, not on the fenced
-    subset (pinning the subset still leaves the main job recomputing
-    the parent)."""
+def checkpoint_fenced(
+    df: DataFrame, operator: str, fence: str, over: Column, rows: Column
+) -> DataFrame:
+    """Bucket-tier fence site: materialize ``df`` (eager
+    localCheckpoint) when a collector is active, counting the rows
+    where ``over`` holds as fenced groups and summing ``rows`` over
+    them as fenced rows.  The counts are observed metrics at the root
+    of the checkpoint query, so they ride its one job and are read
+    synchronously from its query execution.  The pinned frame then
+    feeds the fence filter and the downstream join without re-running
+    the upstream pipeline.  No collector ⇒ returns ``df`` untouched —
+    the driver/bench path keeps its plan byte-identical.  Call this on
+    the grouped frame the fence filters, not on the fenced subset."""
     if active() is None:
         return df
-    return df.localCheckpoint(eager=True)
+    name = f"fence:{operator}:{next(_observation_ids)}"
+    observed = df.observe(
+        name,
+        F.count_if(over),
+        F.coalesce(F.sum(F.when(over, rows)), F.lit(0)).cast("bigint"),
+    )
+    pinned = observed.localCheckpoint(eager=True)
+    counts = observed._jdf.queryExecution().observedMetrics().apply(name)
+    record_counts(operator, fence, counts.getLong(0), counts.getLong(1))
+    return pinned
 
 
-def record_fence(
-    operator: str,
-    fence: str,
-    fenced_groups: DataFrame,
-    rows_col: str | None = None,
+def record_counts(
+    operator: str, fence: str, fenced_groups: int, fenced_rows: int
 ) -> None:
-    """Report a fence site.  ``fenced_groups`` is the (small) frame of
-    over-cap group keys the fence is about to drop — one row per
-    fenced group, with ``rows_col`` naming its member-count column
-    when the site has one.  No-op unless a collector is active, so
-    fence sites may call this unconditionally."""
+    """Report a fence site whose counts are already on the driver.
+    No-op unless a collector is active."""
     collector = active()
     if collector is None:
         return
-    aggs = [F.count("*").alias("_groups")]
-    if rows_col is not None:
-        aggs.append(
-            F.coalesce(F.sum(rows_col), F.lit(0)).cast("bigint").alias("_rows")
-        )
-    row = fenced_groups.agg(*aggs).first()
-    rec = {
-        "operator": operator,
-        "fence": fence,
-        "fenced_groups": int(row["_groups"]),
-    }
-    if rows_col is not None:
-        rec["fenced_rows"] = int(row["_rows"])
-    collector.records.append(rec)
+    collector.records.append(
+        {
+            "operator": operator,
+            "fence": fence,
+            "fenced_groups": int(fenced_groups),
+            "fenced_rows": int(fenced_rows),
+        }
+    )
+
+
+def record_fence(
+    operator: str, fence: str, fenced_groups: DataFrame, rows_col: str
+) -> None:
+    """Report a window-tier fence site.  ``fenced_groups`` is the
+    (small) frame of over-cap group keys the fence drops — one row per
+    fenced group, ``rows_col`` naming its member count — counted with
+    one eager aggregate.  No-op unless a collector is active, so fence
+    sites may call this unconditionally."""
+    if active() is None:
+        return
+    row = fenced_groups.agg(
+        F.count("*"), F.coalesce(F.sum(rows_col), F.lit(0)).cast("bigint")
+    ).first()
+    record_counts(operator, fence, row[0], row[1])
 
 
 def record_metric(name: str, value) -> None:

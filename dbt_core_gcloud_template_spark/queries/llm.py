@@ -661,7 +661,7 @@ def docs_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_canonical_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", k_shingle=5, threshold=0.1)
-    return dedup.canonical_ids(docs, pairs, "doc_id")
+    return dedup.canonical_ids(docs.select("doc_id"), pairs, "doc_id")
 
 
 # ---------------------------------------------------------------------------

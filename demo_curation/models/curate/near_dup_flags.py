@@ -23,4 +23,4 @@ def model(dbt, session):
         [[0, 1], [2, 3], [4, 5], [6, 7]],
         max_bucket_size=int(cap) if cap not in (None, UNSET) else cap,
     )
-    return dedup.canonical_ids(kept, pairs, "doc_id")
+    return dedup.canonical_ids(kept.select("doc_id"), pairs, "doc_id")

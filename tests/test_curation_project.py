@@ -12,14 +12,39 @@ from pyspark.sql import functions as F
 from dbt_core_gcloud_template_spark.plans.runner import Engine
 
 
+# Upper bounds on the Spark jobs of the two dedup nodes whose fence
+# counts ride jobs that already run (operators/telemetry.py) — each
+# count was identical over three sf0.001 builds.
+JOB_BUDGETS = {
+    "model.curation.semantic_dup_flags": 16,
+    "model.curation.near_dup_flags": 6,
+}
+# per-node job counts of the module's build, read right after it
+NODE_JOBS: dict[str, int] = {}
+
+
 @pytest.fixture(scope="module")
 def curation(spark, tmp_path_factory):
     os.environ["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     wh = spark.conf.get("spark.sql.warehouse.dir")
     spark.sql("DROP DATABASE IF EXISTS curation_dev CASCADE")
     eng = Engine(spark, "demo_curation", state_dir=str(tmp_path_factory.mktemp("cur_state")))
+    tracker = spark.sparkContext.statusTracker()
+    before = {u: set(tracker.getJobIdsForGroup(u)) for u in JOB_BUDGETS}
     results, _ = eng.build()
+    NODE_JOBS.update(
+        {u: len(set(tracker.getJobIdsForGroup(u)) - before[u]) for u in JOB_BUDGETS}
+    )
     return eng, results
+
+
+def test_curation_dedup_node_job_budgets(curation):
+    """The armed fences add no job of their own: near_dup_flags counts
+    its fenced buckets on the pin's checkpoint job, and
+    semantic_dup_flags collects its at most n_lists over-cap clusters
+    once and assigns against the trained codebook as plan literals."""
+    for uid, budget in JOB_BUDGETS.items():
+        assert 0 < NODE_JOBS[uid] <= budget, (uid, NODE_JOBS[uid], budget)
 
 
 def test_curation_dag_green(curation):

@@ -179,6 +179,105 @@ def test_strict_mode_fences_every_dedup_family(spark, monkeypatch):
         assert unfenced != expected, f"case {i}: fixture never trips the cap"
 
 
+def test_bucket_tier_fences_count_exactly(spark):
+    """Armed, every bucket-tier fence site (counted on its pin's own
+    checkpoint job) records exactly what a direct groupBy over the same
+    buckets counts, and arming changes no output row.  Fixture: the
+    eight identical documents of the dedup-family case above share one
+    bucket per band, and twenty near-identical stored vectors share one
+    sign bucket."""
+    from dbt_core_gcloud_template_spark.operators import dedup, similarity
+    from dbt_core_gcloud_template_spark.operators.telemetry import (
+        FenceTelemetry,
+    )
+
+    cap = 3
+    texts = [
+        (i, "the quick brown fox jumps over the lazy dog again and again")
+        for i in range(8)
+    ] + [(100 + i, f"unique document number {i} with its own words") for i in range(4)]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(docs, "doc_id", "text")
+    tagged = sigs.withColumn("_new", F.col("doc_id") < 100)
+    bands = [[0, 1], [2, 3]]
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
+         (2, [0.0, 0.0, 1.0, 0.0]), (3, [0.0, 0.0, 0.0, 1.0])]
+        + [(10 + i, [1.0, 1e-9 * i, 0.0, 0.0]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    e_new = spark.createDataFrame(
+        [(200, [1.0, 1e-6, 0.0, 0.0]), (201, [0.0, 2.5, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+
+    def band_groups(new_only):
+        per_band = [
+            tagged.groupBy(*[f"mh{c}" for c in comps]).agg(
+                F.count("*").alias("n"), F.max("_new").alias("any_new")
+            )
+            for comps in bands
+        ]
+        rows = [
+            r["n"]
+            for g in per_band
+            for r in g.filter(F.col("n") > cap).collect()
+            if r["any_new"] or not new_only
+        ]
+        return len(rows), sum(rows)
+
+    old_buckets = (
+        emb.groupBy(
+            similarity._bucket_expr(
+                F.col("embedding").cast("array<double>"), 4, 4
+            ).alias("b")
+        )
+        .count()
+        .filter(F.col("count") > cap)
+        .collect()
+    )
+    cases = [
+        (
+            "lsh_candidate_pairs",
+            lambda: dedup.lsh_candidate_pairs(
+                sigs, "doc_id", bands, max_bucket_size=cap
+            ),
+            band_groups(new_only=False),
+        ),
+        (
+            "lsh_incremental_pairs",
+            lambda: dedup.lsh_incremental_pairs(
+                sigs.filter("doc_id < 100"), sigs.filter("doc_id >= 100"),
+                "doc_id", bands, max_bucket_size=cap,
+            ),
+            band_groups(new_only=True),
+        ),
+        (
+            "embedding_near_dup_incremental",
+            lambda: similarity.embedding_near_dup_incremental(
+                e_new, emb, "vec_id", "embedding", dim=4, threshold=0.9,
+                max_bucket_size=cap,
+            ),
+            (len(old_buckets), sum(r["count"] for r in old_buckets)),
+        ),
+    ]
+    assert cases[0][2] == (2, 16)  # one 8-doc bucket per band
+    for operator, call, (groups, rows) in cases:
+        assert groups > 0, f"{operator}: fixture never trips the cap"
+        unarmed = sorted(map(tuple, call().collect()))
+        with FenceTelemetry() as ft:
+            armed = sorted(map(tuple, call().collect()))
+        assert armed == unarmed, operator
+        assert ft.records == [
+            {
+                "operator": operator,
+                "fence": "max_bucket_size",
+                "fenced_groups": groups,
+                "fenced_rows": rows,
+            }
+        ], operator
+
+
 def test_engine_vars_arm_strict_fences(spark, sf_dir, tmp_path):
     """`strict_fences: true` in project vars arms the profile for every
     node the run executes (worker threads included) and restores the

@@ -1241,26 +1241,50 @@ def test_fence_telemetry_thread_isolation():
     assert active() is None
 
 
-def test_pin_if_armed_shares_one_computation(spark):
-    """Unarmed, pin_if_armed is the identity (the driver/bench plan is
-    untouched); armed, it severs lineage so the telemetry aggregate and
-    the downstream fence filter read one materialized frame instead of
-    each re-running the upstream pipeline (advisor r7)."""
+def test_checkpoint_fenced_shares_one_computation(spark):
+    """Unarmed, checkpoint_fenced is the identity (the driver/bench
+    plan is untouched and nothing is recorded); armed, it severs
+    lineage so the fence filter and the downstream join read one
+    materialized frame instead of each re-running the upstream
+    pipeline, and the fence counts ride that same checkpoint job."""
     from dbt_core_gcloud_template_spark.operators.telemetry import (
         FenceTelemetry,
-        pin_if_armed,
+        checkpoint_fenced,
     )
 
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
     df = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
-    assert pin_if_armed(df) is df  # no collector => no-op, same object
-    with FenceTelemetry():
-        pinned = pin_if_armed(df)
+    args = ("op", "cap", F.col("count") > 3, F.col("count"))
+    # no collector => no-op, same object
+    assert checkpoint_fenced(df, *args) is df
+    with FenceTelemetry() as ft:
+        pinned, armed_jobs = jobs_in(
+            "checkpoint_fenced_armed", lambda: checkpoint_fenced(df, *args)
+        )
         assert pinned is not df
         # lineage is cut: the logical plan no longer contains the
         # upstream aggregate, so neither consumer can re-run it
         assert "Aggregate" not in pinned._jdf.queryExecution().logical().toString()
         assert pinned.count() == 3
         assert {r["k"] for r in pinned.collect()} == {0, 1, 2}
+    # k=0 holds ids 0,3,6,9 — the one group over the cap
+    assert ft.records == [
+        {"operator": "op", "fence": "cap", "fenced_groups": 1, "fenced_rows": 4}
+    ]
+    # the counts add no job to the checkpoint's own
+    _, bare_jobs = jobs_in(
+        "checkpoint_fenced_bare", lambda: df.localCheckpoint(eager=True)
+    )
+    assert armed_jobs == bare_jobs
 
 
 def test_semdedup_max_cluster_size_fence(spark):
@@ -2415,6 +2439,126 @@ def test_semdedup_incremental_temporal(spark):
         ).collect()
     }
     assert stored == out
+
+
+def test_semdedup_fence_arguments_checked_before_spark_work(spark):
+    """A bad fence call raises before any Spark job runs: armed, split
+    mode without ``dim`` must neither run the fence's count nor leave a
+    tripped-fence record behind (the engine would report an error AND
+    a tripped fence for the node)."""
+    import pytest as _pytest
+
+    from dbt_core_gcloud_template_spark.operators.similarity import (
+        semdedup,
+        semdedup_incremental,
+    )
+    from dbt_core_gcloud_template_spark.operators.telemetry import (
+        FenceTelemetry,
+    )
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+        + [(10 + i, [1.0, 1e-9 * i]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    sc = spark.sparkContext
+    calls = {
+        "split_without_dim": lambda: semdedup(
+            emb, "vec_id", "embedding", n_lists=2, max_cluster_size=5,
+            on_oversize="split",
+        ),
+        "bad_mode": lambda: semdedup(
+            emb, "vec_id", "embedding", n_lists=2, max_cluster_size=5,
+            on_oversize="spill", dim=2,
+        ),
+        "incremental_split_without_dim": lambda: semdedup_incremental(
+            emb.filter("vec_id >= 10"), emb.filter("vec_id < 10"),
+            "vec_id", "embedding", n_lists=2, max_cluster_size=5,
+            on_oversize="split",
+        ),
+    }
+    for name, call in calls.items():
+        group = f"fence_args_{name}"
+        with FenceTelemetry() as ft:
+            sc.setJobGroup(group, group)
+            try:
+                with _pytest.raises(ValueError):
+                    call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        assert ft.records == [], name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+def test_semdedup_codebook_forms_agree(spark):
+    """The three codebook forms assign identically: the kmeans_fit list
+    as plan literals, the same list above the literal threshold (one
+    broadcast row), and the stored (c_id, vector) table.  Literal
+    norms are folded driver-side in the column expression's order, so
+    the cosines are bit-identical and so are the verdicts."""
+    from dbt_core_gcloud_template_spark.operators.similarity import (
+        _with_nearest_list,
+        kmeans_fit,
+        semdedup,
+    )
+
+    rows = [
+        (i, [float((i * 7) % 5) + 0.1, float((i * 3) % 4) - 1.5, 0.3 * (i % 2)])
+        for i in range(60)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = kmeans_fit(emb, "vec_id", "embedding", k=4, max_iter=2)
+    table = spark.createDataFrame(
+        list(enumerate(cents)), "c_id int, vector array<double>"
+    )
+
+    def verdicts(c, **kw):
+        return sorted(
+            map(tuple, semdedup(
+                emb, "vec_id", "embedding", threshold=0.99, centroids=c, **kw
+            ).collect())
+        )
+
+    listed = verdicts(cents)
+    assert listed == verdicts(table)
+    assert any(r[3] for r in listed)  # the fixture has duplicates
+    fenced = verdicts(cents, max_cluster_size=10, on_oversize="split", dim=3)
+    assert fenced == verdicts(
+        table, max_cluster_size=10, on_oversize="split", dim=3
+    )
+    base = emb.select("vec_id", F.col("embedding").alias("_v"))
+    lit = _with_nearest_list(base, cents).select("vec_id", "list_id")
+    bcast = _with_nearest_list(base, cents, max_literal_centroids=1).select(
+        "vec_id", "list_id"
+    )
+    assert "BroadcastNestedLoopJoin" not in lit._jdf.queryExecution().toString()
+    assert sorted(lit.collect()) == sorted(bcast.collect())
+    assert sorted((r[0], r[1]) for r in listed) == sorted(
+        map(tuple, lit.collect())
+    )
+
+
+def test_canonical_ids_keeps_docs_columns(spark):
+    """canonical_ids carries every column of the docs frame it is given
+    (semdedup passes its list_id through instead of re-joining it by
+    id); a bare id frame gives the ids alone."""
+    from dbt_core_gcloud_template_spark.operators.dedup import canonical_ids
+
+    docs = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 0), (3, "c", 1)],
+        "doc_id long, text string, list_id int",
+    )
+    pairs = spark.createDataFrame([(1, 2)], "a_id long, b_id long")
+    out = canonical_ids(docs, pairs, "doc_id")
+    assert out.columns == [
+        "doc_id", "text", "list_id", "canonical_id", "is_duplicate"
+    ]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "a", 0, 1, False), (2, "b", 0, 1, True), (3, "c", 1, 3, False)
+    ]
+    assert canonical_ids(docs.select("doc_id"), pairs, "doc_id").columns == [
+        "doc_id", "canonical_id", "is_duplicate"
+    ]
 
 
 def test_semdedup_incremental_max_cluster_size_fence(spark):

@@ -156,10 +156,11 @@ EXPECTATIONS = {
     # final assignment+pairing plan must stay the embedding_semdedup
     # shape with the codebook broadcast, no extra corpus shuffle
     "embedding_semdedup_trained": (5, []),
-    # r7: the fenced variant adds one broadcast anti-join per side on
-    # the hot-cluster set (a tiny aggregate), no extra corpus shuffle
-    "embedding_semdedup_fenced": (7, []),
-    "embedding_semdedup_split": (7, []),
+    # the fenced variants collect the over-cap lists (at most n_lists
+    # rows) before this plan exists and apply them as a literal isin:
+    # the plan keeps the embedding_semdedup shape
+    "embedding_semdedup_fenced": (5, []),
+    "embedding_semdedup_split": (5, []),
     # r7: index-maintenance folds — digest append is checkpoint-fed
     # union (no live exchange); window fold = 2 enumeration groupBys
     # + 1 merge join + 1 histogram groupBy

@@ -305,10 +305,10 @@ AUDIT = [
     ),
     (
         "embedding_semdedup_fenced",
-        "SemDeDup + max_cluster_size fence: one tiny hot-cluster "
-        "aggregate broadcast into a left-anti on each join side — no "
-        "extra corpus shuffle, over-cap clusters never reach the pair "
-        "join",
+        "SemDeDup + max_cluster_size fence: the over-cap clusters "
+        "(at most n_lists rows) are collected before planning and "
+        "filtered as a literal isin — the embedding_semdedup shape, "
+        "over-cap clusters never reach the pair join",
     ),
     (
         "docs_window_index_fold",
