@@ -2,27 +2,43 @@
 (SURVEY.md §3.1 step 4 "parse → render → manifest"; reference dbt 1.10
 public semantics).
 
-Context functions provided (X1-X5 parity):
-  ref(name)                → relation FQN + DAG edge
-  source(src, table)       → source FQN + DAG edge
-  config(**kw)             → node config (captured, returns '')
+ONE render context (``render``) serves every template site — model and
+snapshot compile, unit tests, ``run_operation``, model hooks and
+``show --inline``: strict undefined (a typo is a CompilerError, never
+''), project macros prepended, and (X1, X4-X5 parity)
+
   var(name, default)       → project vars
   env_var(name, default)   → os.environ
-  this                     → the node's own FQN (incremental models)
-  is_incremental()         → True when the target exists and the run
-                             is not --full-refresh
-  log(msg), exceptions.raise_compiler_error(msg)
+  target                   → {name, schema} of the active target
+  log(msg)                 → '' (run_operation prints it)
+  exceptions.raise_compiler_error(msg)
+  surrogate_key(cols), dbt_utils.generate_surrogate_key(cols)
 
-Deferral (E4, reference ci_build.sh:53): when a deferred manifest is
-given, ``ref()`` to a node that is neither selected nor already built
-in the target schema resolves to the deferred (prod) FQN instead.
+A site passes only what differs for it: ref(name) / source(src, table)
+(relation FQN + DAG edge at compile, fixture views in unit tests),
+this (the node's own schema.alias), config(**kw) (captured at compile),
+run_query(sql) and a printing log (run_operation), and
+
+  is_incremental()         → ``is_incremental``: True only when
+                             materialized='incremental', the node's own
+                             relation exists, and the run is not
+                             --full-refresh (config full_refresh=false
+                             overrides the flag); False at other sites
+
+The predicate is asked once per model, at compile, and its answer is
+kept on ``Node.incremental``: the rendered SQL, the Python model's
+``dbt.is_incremental()`` and the runner's write path all read that one
+answer, so they cannot disagree.  Deferral (E4, reference
+ci_build.sh:53) rewrites compiled refs after compile, in
+``Engine.build``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
-from typing import Any
+from typing import Any, Callable
 
 import jinja2
 
@@ -58,52 +74,67 @@ def _test_unique_id(model_name: str, column: str, test_name: str) -> str:
     return f"test.{test_name}_{model_name}_{column}"
 
 
-def render_with_fixtures(
-    project: Project,
-    raw_sql: str,
-    ref_map: dict[str, str],
-    source_map: dict[tuple[str, str], str],
-    target: str,
-    default_schema: str,
-) -> str:
-    """Render a model's raw SQL with ref()/source() resolving to fixture
-    relations (temp views) instead of warehouse tables — the unit-test
-    compilation mode.  Every input the model touches must have a
-    fixture; anything else is a CompilerError (dbt unit tests mock ALL
-    inputs)."""
-    env = jinja2.Environment(undefined=jinja2.StrictUndefined)
+def _surrogate_key(cols) -> str:
+    # dbt_utils.generate_surrogate_key: deterministic row key from
+    # columns (NULL-safe, engine-portable md5)
+    if isinstance(cols, str):
+        cols = [cols]
+    parts = ", ".join(f"coalesce(cast({c} as string), '_null_')" for c in cols)
+    return f"md5(concat_ws('-', {parts}))"
 
-    def _ref(name: str) -> str:
-        if name not in ref_map:
-            raise CompilerError(f"unit test: no fixture given for ref('{name}')")
-        return ref_map[name]
 
-    def _source(src: str, tbl: str) -> str:
-        if (src, tbl) not in source_map:
-            raise CompilerError(
-                f"unit test: no fixture given for source('{src}', '{tbl}')"
-            )
-        return source_map[(src, tbl)]
+_ENV = jinja2.Environment(undefined=jinja2.StrictUndefined)
 
+
+def _target_schema(project: Project, target: str) -> str:
+    return project.targets.get(target, {}).get("schema", f"analytics_{target}")
+
+
+def render(project: Project, target: str, sql: str, where: str, **site: Any) -> str:
+    """Render ``sql`` in the one dbt context (see the module docstring);
+    ``site`` adds or overrides names.  An undefined name raises
+    ``CompilerError`` prefixed with ``where``."""
     ctx = {
-        "config": lambda **kw: "",
-        "ref": _ref,
-        "source": _source,
         "var": lambda k, d=None: project.vars.get(k, d),
         "env_var": lambda k, d="": os.environ.get(k, d),
-        "this": "__unit_test_self__",
-        "is_incremental": lambda: False,
-        "log": lambda msg, info=False: None,
+        "target": {"name": target, "schema": _target_schema(project, target)},
+        "log": lambda msg, info=False: "",
         "exceptions": _Exceptions,
-        "target": {"name": target, "schema": default_schema},
+        "surrogate_key": _surrogate_key,
+        "dbt_utils": {"generate_surrogate_key": _surrogate_key},
+        "config": lambda **kw: "",
+        "is_incremental": lambda: False,
+        **site,
     }
-    template_sql = raw_sql
     if project.macro_sql:
-        template_sql = project.macro_sql + "\n" + template_sql
+        sql = project.macro_sql + "\n" + sql
     try:
-        return env.from_string(template_sql).render(**ctx).strip()
+        return _ENV.from_string(sql).render(ctx)
     except jinja2.exceptions.UndefinedError as e:
-        raise CompilerError(f"unit test render: {e}") from e
+        raise CompilerError(f"{where}: {e}") from e
+
+
+def effective_full_refresh(config: dict[str, Any], full_refresh: bool) -> bool:
+    """The run's ``--full-refresh`` flag as it applies to one node:
+    config ``full_refresh: false`` protects a big incremental (or
+    streaming) target from full-refresh rebuilds (dbt parity)."""
+    return full_refresh and config.get("full_refresh") is not False
+
+
+def is_incremental(
+    config: dict[str, Any],
+    fqn: str,
+    full_refresh: bool,
+    relation_exists: Callable[[str], bool],
+) -> bool:
+    """dbt's ``is_incremental()``: an incremental model whose own
+    relation ``fqn`` (its schema/alias) already exists, on a run that is
+    not an effective full refresh."""
+    if config.get("materialized") != "incremental":
+        return False
+    if effective_full_refresh(config, full_refresh):
+        return False
+    return relation_exists(fqn)
 
 
 def compile_python_model(
@@ -182,10 +213,14 @@ def compile_project(
     project: Project,
     target: str | None = None,
     full_refresh: bool = False,
-    built_relations: set[str] | None = None,
+    relation_exists: Callable[[str], bool] = lambda fqn: False,
     sample: str | None = None,
 ) -> Manifest:
     """Render every model/snapshot/seed/source/test into a Manifest.
+
+    ``relation_exists(fqn)`` backs ``is_incremental()``, decided here
+    once per model and kept on ``Node.incremental``; by default no
+    relation counts as built.
 
     ``sample`` (dbt 1.10 sample mode, e.g. "3 days"): every ref() to a
     model declaring ``event_time`` and every source() whose declaration
@@ -234,8 +269,7 @@ def compile_project(
         tok = m.group(1)
         return tok.startswith("`") or tok.lower() not in _SQL_CLAUSE_KEYWORDS
     target = target or project.default_target
-    tconf = project.targets.get(target, {})
-    default_schema = tconf.get("schema", f"analytics_{target}")
+    default_schema = _target_schema(project, target)
     manifest = Manifest(project_name=project.name, target=target)
 
     # sources first (S1): they are nodes so freshness/docs/state see them
@@ -312,8 +346,6 @@ def compile_project(
     seed_uid = {s.name: f"seed.{project.name}.{s.name}" for s in project.seeds}
     snap_uid = {s.name: f"snapshot.{project.name}.{s.name}" for s in project.snapshots}
 
-    env = jinja2.Environment(undefined=jinja2.StrictUndefined)
-
     def render_node(
         name: str,
         raw_sql: str,
@@ -374,39 +406,24 @@ def compile_project(
             def __str__(self) -> str:
                 return _own_fqn()
 
-        def _surrogate_key(cols) -> str:
-            # dbt_utils.generate_surrogate_key: deterministic row key
-            # from columns (NULL-safe, engine-portable md5)
-            if isinstance(cols, str):
-                cols = [cols]
-            parts = ", ".join(
-                f"coalesce(cast({c} as string), '_null_')" for c in cols
-            )
-            return f"md5(concat_ws('-', {parts}))"
+        # decided once per node: the rendered SQL and the runner's write
+        # path (Node.incremental) read the same answer
+        decide = functools.cache(
+            lambda: is_incremental(captured, _own_fqn(), full_refresh, relation_exists)
+        )
 
-        ctx = {
-            "config": _config,
-            "ref": _ref,
-            "source": _source,
-            "surrogate_key": _surrogate_key,
-            "dbt_utils": {"generate_surrogate_key": _surrogate_key},
-            "var": lambda k, d=None: project.vars.get(k, d),
-            "env_var": lambda k, d="": os.environ.get(k, d),
-            "this": _This(),
-            "is_incremental": lambda: (
-                not full_refresh and _own_fqn() in (built_relations or set())
-            ),
-            "log": lambda msg, info=False: None,
-            "exceptions": _Exceptions,
-            "target": {"name": target, "schema": default_schema},
-        }
-        template_sql = raw_sql
-        if project.macro_sql:
-            template_sql = project.macro_sql + "\n" + template_sql
-        try:
-            compiled = env.from_string(template_sql).render(**ctx)
-        except jinja2.exceptions.UndefinedError as e:
-            raise CompilerError(f"{uid}: {e}") from e
+        compiled = render(
+            project,
+            target,
+            raw_sql,
+            uid,
+            config=_config,
+            ref=_ref,
+            source=_source,
+            this=_This(),
+            is_incremental=decide,
+        )
+        incremental = decide()  # before schema/alias leave `captured`
         compiled = re.sub(r"\n{3,}", "\n\n", compiled).strip()
         return Node(
             unique_id=uid,
@@ -419,6 +436,7 @@ def compile_project(
             config=captured,
             depends_on=sorted(set(deps)),
             checksum=checksum_of(raw_sql, captured),
+            incremental=incremental,
         )
 
     for m in project.models:
@@ -432,6 +450,9 @@ def compile_project(
         if m.language == "python":
             node = compile_python_model(
                 m, model_uid, seed_uid, snap_uid, src_fqn, base, default_schema
+            )
+            node.incremental = is_incremental(
+                node.config, node.fqn, full_refresh, relation_exists
             )
         else:
             node = render_node(m.name, m.raw_sql, model_uid[m.name], base)

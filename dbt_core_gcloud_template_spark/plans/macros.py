@@ -9,19 +9,18 @@ Inside a macro the context provides:
                      macro-time query execution)
   log(msg)         → stdout (the reference parses SUMMARY| lines from
                      the log stream, pr_data_diff.sh:94-118)
-  env_var / var / target / exceptions.raise_compiler_error
 
-``run_operation(engine, name, args)`` renders ``{{ name(**args) }}``
-with that context — the engine's interactive entry point (X2).
+on top of the shared render context (``compiler.render``: var,
+env_var, target, exceptions, surrogate_key).  ``run_operation(engine,
+name, args)`` renders ``{{ name(**args) }}`` with that context — the
+engine's interactive entry point (X2).
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-import jinja2
-
-from .compiler import _Exceptions
+from .compiler import render
 
 
 class QueryResult:
@@ -48,14 +47,10 @@ class QueryResult:
 
 def run_operation(engine, name: str, args: dict[str, Any] | None = None) -> str:
     """Render and execute macro ``name`` with ``args`` (X2)."""
-    import os
-
-    project = engine.project
-    spark = engine.spark
     logged: list[str] = []
 
     def _run_query(sql: str) -> QueryResult:
-        df = spark.sql(sql)
+        df = engine.spark.sql(sql)
         return QueryResult(df.columns, [tuple(r) for r in df.collect()])
 
     def _log(msg: str, info: bool = False) -> str:
@@ -63,23 +58,16 @@ def run_operation(engine, name: str, args: dict[str, Any] | None = None) -> str:
         logged.append(str(msg))
         return ""
 
-    env = jinja2.Environment(undefined=jinja2.StrictUndefined)
-    ctx = {
-        "run_query": _run_query,
-        "log": _log,
-        "env_var": lambda k, d="": os.environ.get(k, d),
-        "var": lambda k, d=None: project.vars.get(k, d),
-        "target": {
-            "name": engine.target,
-            "schema": engine.target_conf.get("schema", ""),
-        },
-        "exceptions": _Exceptions,
-    }
     arg_names = sorted((args or {}).keys())
     call = f"{{{{ {name}({', '.join(f'{a}=__arg_{a}' for a in arg_names)}) }}}}"
-    for a in arg_names:
-        ctx[f"__arg_{a}"] = args[a]
-    template = env.from_string((project.macro_sql or "") + "\n" + call)
-    rendered = template.render(**ctx)
+    rendered = render(
+        engine.project,
+        engine.target,
+        call,
+        f"run-operation {name}",
+        run_query=_run_query,
+        log=_log,
+        **{f"__arg_{a}": args[a] for a in arg_names},
+    )
     # log() already printed to stdout; return only non-log render output
     return "" if logged else rendered.strip()

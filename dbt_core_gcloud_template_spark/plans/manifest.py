@@ -31,6 +31,8 @@ class Node:
     description: str = ""
     columns: dict[str, str] = field(default_factory=dict)  # name -> description
     tags: list[str] = field(default_factory=list)
+    # compile's is_incremental() answer (kept out of config: no checksum)
+    incremental: bool = False
 
     @property
     def fqn(self) -> str:

@@ -61,7 +61,8 @@ from ..operators import fences as fences_profile
 from ..operators import snapshot as snapshot_op
 from ..operators import telemetry as fence_telemetry
 from ..operators import tests as tests_op
-from .compiler import compile_project
+from ..sources.registry import file_bytes
+from .compiler import CompilerError, compile_project, effective_full_refresh, render
 from .manifest import Manifest, Node
 from .project import Project, load_project
 
@@ -568,11 +569,6 @@ class Engine:
         self._record(fqn, {"type": "view", "sql": sql})
 
     # ------------------------------------------------------------- node exec
-    def _built_relations(self) -> set[str]:
-        sch = self.target_conf.get("schema", f"analytics_{self.target}")
-        fqns = (f"{sch}.{m.name}" for m in self.project.models)
-        return {f for f in fqns if self.spark.catalog.tableExists(f)}
-
     @contextmanager
     def node_context(self, uid: str):
         """The node-execution seam: everything one DAG node runs under.
@@ -631,7 +627,7 @@ class Engine:
             self.project,
             self.target,
             full_refresh=full_refresh,
-            built_relations=self._built_relations(),
+            relation_exists=self.spark.catalog.tableExists,
             sample=sample,
         )
 
@@ -815,17 +811,11 @@ class Engine:
         stats instead.  Conservative: column pruning/partition pruning
         reduce the real scan below this figure, same as BigQuery's
         estimate."""
-        total = 0
         try:
-            for f in df.inputFiles():
-                p = f.removeprefix("file:")
-                try:
-                    total += os.path.getsize(p)
-                except OSError:
-                    pass
+            files = df.inputFiles()
         except Exception:  # non-file-based plans (views over streams etc.)
             return 0
-        return total
+        return file_bytes(self.spark, files)
 
     def _check_bytes_cap(self, est: int, uid: str) -> None:
         cap = self.target_conf.get("maximum_bytes_billed")
@@ -978,7 +968,7 @@ class Engine:
             message=f"STREAMING TABLE ({n_batches} micro-batches)",
         )
 
-    def _mat_microbatch(self, node: Node, df: DataFrame, full_refresh: bool, inc):
+    def _mat_microbatch(self, node: Node, df: DataFrame, inc):
         """dbt 1.9 microbatch incremental strategy (public semantics),
         partition-aligned for Spark.
 
@@ -1006,7 +996,7 @@ class Engine:
             "data_type": "timestamp",
             "granularity": gran,
         }
-        if full_refresh or not self.spark.catalog.tableExists(fqn):
+        if not node.incremental:
             begin = cfg.get("begin")
             if begin:
                 df = df.filter(F.col(event_time) >= F.lit(str(begin)).cast("timestamp"))
@@ -1058,13 +1048,13 @@ class Engine:
                 f"contract violation on {node.unique_id}: " + "; ".join(problems)
             )
 
-    def _exec_python_model(self, node: Node, full_refresh: bool) -> DataFrame:
+    def _exec_python_model(self, node: Node) -> DataFrame:
         """dbt Python-model execution (dbt 1.3 semantics, Spark-native):
         import the model file, call ``model(dbt, session)``, and hand the
         returned DataFrame to the normal materialization paths.  The
         ``dbt`` object resolves ref()/source() to the relations the
         compiler bound (so deferral and custom schemas hold), and
-        ``is_incremental()`` matches the jinja rule."""
+        ``is_incremental()`` is compile's decision (``node.incremental``)."""
         import importlib.util
 
         path = os.path.join(self.project.root, node.config["path"])
@@ -1074,11 +1064,6 @@ class Engine:
         if not hasattr(mod, "model"):
             raise RuntimeError(f"{path}: python model must define model(dbt, session)")
         engine = self
-        incremental = (
-            not full_refresh
-            and node.materialized == "incremental"
-            and self.spark.catalog.tableExists(node.fqn)
-        )
 
         class _Dbt:
             this = node.fqn
@@ -1120,7 +1105,7 @@ class Engine:
 
             @staticmethod
             def is_incremental() -> bool:
-                return incremental
+                return node.incremental
 
             @staticmethod
             def record_metric(name: str, value) -> None:
@@ -1142,18 +1127,16 @@ class Engine:
         an existing incremental target, its incremental strategy) to.
         A strategy returns its success message and raises on failure."""
         mat = node.materialized
-        if node.config.get("full_refresh") is False:
-            # dbt parity: config full_refresh=false protects a big
-            # incremental table from --full-refresh rebuilds
-            full_refresh = False
         if mat == "ephemeral":
             # never materialized — consumers carry the SQL as a CTE
             return NodeResult(node.unique_id, "success", message="EPHEMERAL (inlined)")
         if mat == "streaming_table":
-            return self._run_streaming_table(node, full_refresh)
+            return self._run_streaming_table(
+                node, effective_full_refresh(node.config, full_refresh)
+            )
         python = node.config.get("language") == "python"
         if python:
-            df = self._exec_python_model(node, full_refresh)
+            df = self._exec_python_model(node)
         else:
             df = self.spark.sql(node.compiled_sql)
         self._enforce_contract(df, node)
@@ -1163,10 +1146,10 @@ class Engine:
             key = mat if mat == "table" or (mat == "view" and not python) else None
         elif strategy == "microbatch":
             key = strategy
-        elif full_refresh or not self.spark.catalog.tableExists(node.fqn):
-            key = "table"
-        else:
+        elif node.incremental:  # compile's is_incremental() answer
             key = "incremental"  # an existing target: strategy picked below
+        else:
+            key = "table"
         # a view reads nothing when it is created: no cost guards
         if key != "view" and self._empty:
             df = df.limit(0)
@@ -1187,15 +1170,15 @@ class Engine:
             return NodeResult(
                 node.unique_id, "error", message=f"unknown materialization {mat}"
             )
-        msg = fn(self, node, df, full_refresh, inc)
+        msg = fn(self, node, df, inc)
         return NodeResult(node.unique_id, "success", message=msg, input_bytes=est)
 
-    def _mat_view(self, node: Node, df: DataFrame, full_refresh: bool, inc):
+    def _mat_view(self, node: Node, df: DataFrame, inc):
         self.create_view(node.fqn, node.compiled_sql)
         self._persist_docs(node)
         return "CREATE VIEW"
 
-    def _mat_table(self, node: Node, df: DataFrame, full_refresh: bool, inc):
+    def _mat_table(self, node: Node, df: DataFrame, inc):
         self.write_relation(df, node.fqn, node.config)
         self._persist_docs(node)
         return f"CREATE TABLE ({node.materialized})"
@@ -1255,13 +1238,11 @@ class Engine:
             on_schema_change=on_schema_change,
         )
 
-    def _mat_append(self, node: Node, df: DataFrame, full_refresh: bool, inc):
+    def _mat_append(self, node: Node, df: DataFrame, inc):
         self.write_relation(df, node.fqn, node.config, mode="append")
         return "INSERT APPEND"
 
-    def _mat_insert_overwrite(
-        self, node: Node, df: DataFrame, full_refresh: bool, inc
-    ):
+    def _mat_insert_overwrite(self, node: Node, df: DataFrame, inc):
         part = node.config.get("partition_by")
         if part:
             pcol, pexpr = self._derived_partition_col(part)
@@ -1270,7 +1251,7 @@ class Engine:
         overwrite_partitions(self.spark, df, node.fqn)
         return "INSERT OVERWRITE"
 
-    def _mat_merge(self, node: Node, df: DataFrame, full_refresh: bool, inc):
+    def _mat_merge(self, node: Node, df: DataFrame, inc):
         """Merge (also the landing for schema drift under any strategy):
         read-modify-swap on parquet; native MERGE INTO on Delta/Iceberg
         (plans/formats.py).  dbt delete+insert is the same operation —
@@ -1482,10 +1463,9 @@ class Engine:
 
     def _run_hooks(self, node: Node, key: str) -> None:
         """Model-level pre/post hooks (dbt `pre-hook`/`post-hook`):
-        SQL statements executed around the node's materialization, with
-        `this` / `target` available (e.g. GRANT, ANALYZE, audit INSERT)."""
-        import jinja2
-
+        SQL statements executed around the node's materialization,
+        rendered in the shared context with `this` set (e.g. GRANT,
+        ANALYZE, audit INSERT)."""
         hooks = node.config.get(key) or node.config.get(key.replace("_", "-")) or []
         if isinstance(hooks, (str, dict)):
             hooks = [hooks]
@@ -1493,9 +1473,9 @@ class Engine:
             sql = h.get("sql") if isinstance(h, dict) else h
             if not sql:
                 continue
-            rendered = jinja2.Environment().from_string(str(sql)).render(
+            rendered = render(
+                self.project, self.target, str(sql), f"{node.unique_id} {key}",
                 this=node.fqn,
-                target={"name": self.target, "schema": node.schema},
             )
             self.spark.sql(rendered)
 
@@ -1580,16 +1560,14 @@ class Engine:
         milliseconds regardless of production table sizes (the point of
         the feature at 100 TB: logic tests that never scan the lake).
         """
-        from .compiler import render_with_fixtures
-
         cfg = node.config
         model = manifest.nodes[cfg["model_uid"]]
         ref_re = re.compile(r"ref\(\s*['\"]([^'\"]+)['\"]\s*\)")
         src_re = re.compile(
             r"source\(\s*['\"]([^'\"]+)['\"]\s*,\s*['\"]([^'\"]+)['\"]\s*\)"
         )
-        ref_map: dict[str, str] = {}
-        source_map: dict[tuple[str, str], str] = {}
+        # ("ref", name) / ("source", src, table) -> fixture view
+        fixtures: dict[tuple[str, ...], str] = {}
         for i, given in enumerate(cfg.get("given") or []):
             inp = str(given.get("input", ""))
             rows = given.get("rows") or []
@@ -1610,22 +1588,31 @@ class Engine:
             m_ref = ref_re.fullmatch(inp.strip())
             m_src = src_re.fullmatch(inp.strip())
             if m_ref:
-                ref_map[m_ref.group(1)] = view
+                fixtures[("ref", m_ref.group(1))] = view
             elif m_src:
-                source_map[(m_src.group(1), m_src.group(2))] = view
+                fixtures[("source", m_src.group(1), m_src.group(2))] = view
             else:
                 return NodeResult(
                     node.unique_id, "error", message=f"bad fixture input: {inp!r}"
                 )
+
+        def _fixture(kind: str, *key: str) -> str:
+            # dbt unit tests mock ALL inputs: a missing one is an error
+            if (kind, *key) not in fixtures:
+                call = f"{kind}({', '.join(map(repr, key))})"
+                raise CompilerError(f"unit test: no fixture given for {call}")
+            return fixtures[(kind, *key)]
+
         try:
-            sql = render_with_fixtures(
+            sql = render(
                 self.project,
-                model.raw_sql,
-                ref_map,
-                source_map,
                 self.target,
-                model.schema,
-            )
+                model.raw_sql,
+                "unit test render",
+                ref=lambda name: _fixture("ref", name),
+                source=lambda src, tbl: _fixture("source", src, tbl),
+                this="__unit_test_self__",
+            ).strip()
             actual = self.spark.sql(sql)
         except Exception as e:  # noqa: BLE001
             return NodeResult(node.unique_id, "error", message=str(e)[:500])
@@ -1678,8 +1665,6 @@ class Engine:
         """dbt `show --inline` parity: render an ad-hoc jinja SQL
         string ({{ ref(...) }}/{{ source(...) }} resolve against this
         project) and preview N rows."""
-        import jinja2
-
         manifest = self.compile()
         by_name = {
             n.name: n.fqn
@@ -1691,11 +1676,13 @@ class Engine:
             for u, n in manifest.nodes.items()
             if n.resource_type == "source"
         }
-        rendered = jinja2.Environment().from_string(sql).render(
+        rendered = render(
+            self.project,
+            self.target,
+            sql,
+            "show --inline",
             ref=lambda name: by_name[name],
             source=lambda s, t: src[(s, t)],
-            var=lambda k, d=None: self.project.vars.get(k, d),
-            env_var=lambda k, d="": os.environ.get(k, d),
         )
         self.register_sources()
         return [r.asDict() for r in self.spark.sql(rendered).limit(limit).collect()]

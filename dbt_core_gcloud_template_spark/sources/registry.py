@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,10 +65,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     SimHash, dot products).  At 100 TB the scan already yields thousands
     of splits and this is a no-op.
 
-    The probe uses ``inputFiles()`` (pure metadata) — NOT ``df.rdd``,
-    whose eager physical planning measurably slowed downstream execution
-    (~2× on the LSH pipeline).  Heuristic: few files AND small total
-    bytes ⇒ the scan can't parallelize ⇒ repartition.
+    The probe uses ``inputFiles()`` and ``file_bytes`` (pure metadata)
+    — NOT ``df.rdd``, whose eager physical planning measurably slowed
+    downstream execution (~2× on the LSH pipeline).  Heuristic: few
+    files AND small total bytes ⇒ the scan can't parallelize ⇒
+    repartition.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -76,15 +78,28 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         return df
     if not files or len(files) >= target:
         return df
-    total = 0
-    for f in files:
-        p = f.removeprefix("file:")
-        if os.path.exists(p):
-            total += os.path.getsize(p)
     # one 128MB split per partition is Spark's own default split sizing
-    if total < target * 128 * 1024 * 1024:
+    if file_bytes(df.sparkSession, files) < target * 128 * 1024 * 1024:
         return df.repartition(target)
     return df
+
+
+def file_bytes(spark: SparkSession, files: list[str]) -> int:
+    """Total size of ``df.inputFiles()`` entries, from file metadata
+    only (no Spark job).  Each entry is a percent-encoded URI
+    (``file:///a%20b/x.parquet``, ``s3a://...``) resolved through the
+    session's Hadoop FileSystem; an unreadable entry counts 0."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    Path, URI = jvm.org.apache.hadoop.fs.Path, jvm.java.net.URI
+    total = 0
+    for f in files:
+        try:
+            path = Path(URI(f))
+            total += path.getFileSystem(conf).getFileStatus(path).getLen()
+        except Py4JError:  # vanished file, unknown scheme, no credentials
+            pass
+    return total
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
