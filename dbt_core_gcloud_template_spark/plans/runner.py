@@ -61,43 +61,22 @@ from ..operators import fences as fences_profile
 from ..operators import snapshot as snapshot_op
 from ..operators import telemetry as fence_telemetry
 from ..operators import tests as tests_op
-from ..sources.registry import file_bytes
+from ..sources.registry import file_bytes, source_schema
 from .compiler import CompilerError, compile_project, effective_full_refresh, render
 from .manifest import Manifest, Node
 from .project import Project, load_project
 
-# Session-lifetime memo of external-source schemas, keyed on the
-# physical identity of the data ((realpath, format, mtime_ns, size)):
-# `CREATE TABLE ... USING parquet LOCATION ...` without a column list
-# re-infers the schema from the file footer on EVERY registration
-# (~0.3 s/source steady-state), and a fresh build after a
-# catalog wipe pays it per source.  With the schema remembered, the
-# backing table is created with an explicit column list (~0.09 s) —
-# identical table, no inference.  The mtime/size key preserves the
-# staleness-repoint safety story: a replaced or rewritten file at the
-# same location re-probes.  Schemas are session-independent metadata
-# (StructType), so one module-level map serves every Engine instance.
-_SOURCE_SCHEMA_MEMO: dict[tuple, Any] = {}
-
 # Session-keyed memo of unit-test fixture frames on their literal row
-# content: `createDataFrame(rows)` pays schema
-# inference + py4j per call (~0.1-0.2 s), and fixtures are
-# version-controlled constants — identical rows always produce the
-# identical frame, so rebuilding them per build is pure overhead.
-# Keyed by (sparkContext applicationId, repr(rows)); the temp view is
-# still (re)registered per test run.
+# content: `createDataFrame(rows)` pays schema inference and py4j per
+# call, and fixtures are version-controlled constants.  Keyed by
+# (applicationId, repr(rows)); the temp view is re-registered per run.
 _UT_FIXTURE_MEMO: dict[tuple, DataFrame] = {}
 
-# Session-keyed memo of the VERIFIED location of each source backing
-# table.  The staleness-repoint check needs the existing table's
-# current location; with no catalog.json record it fell back to
-# `DESCRIBE FORMATTED` — a ~0.25 s DataFrame job per source per build.
-# register_sources is the only writer of these tables, and it updates
-# this memo on every create/keep/repoint decision, so within one
-# session the memo is exactly as authoritative as DESCRIBE against the
-# same session catalog.  A fresh session (new applicationId) misses and
-# takes the DESCRIBE path as before — cross-session staleness safety is
-# unchanged.
+# Session-keyed memo of the verified location of each source backing
+# table, for the staleness-repoint check when catalog.json has no record
+# (it saves a `DESCRIBE FORMATTED` job per source per build).
+# register_sources, the only writer of these tables, updates it on every
+# create/keep/repoint decision; a new session misses and asks DESCRIBE.
 _SOURCE_LOCATION_MEMO: dict[tuple, str] = {}
 
 
@@ -285,30 +264,6 @@ class Engine:
             except Exception:
                 pass
 
-    def _source_schema_ddl(self, location: str, fmt: str) -> "str | None":
-        """DDL column list for an external source, memoized on the
-        file's physical identity (see ``_SOURCE_SCHEMA_MEMO``).
-        Returns None when the location cannot be statted (remote URI,
-        missing path) — callers fall back to inference-at-create."""
-        path = str(location).removeprefix("file:")
-        try:
-            st = os.stat(path)
-        except OSError:
-            return None
-        key = (os.path.realpath(path), fmt, st.st_mtime_ns, st.st_size)
-        ddl = _SOURCE_SCHEMA_MEMO.get(key)
-        if ddl is None:
-            try:
-                schema = self.spark.read.format(fmt).load(location).schema
-            except Exception:
-                return None
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in schema.fields
-            )
-            _SOURCE_SCHEMA_MEMO[key] = ddl
-        return ddl
-
     def register_sources(self) -> None:
         """S1: external tables registered by LOCATION (scan stays
         declarative → pushdown + pruning reach the parquet reader)."""
@@ -359,15 +314,18 @@ class Engine:
                 if prev is None or str(prev).removeprefix("file:") != cur:
                     self.spark.sql(f"DROP TABLE IF EXISTS {backing}")
             if not self.spark.catalog.tableExists(backing):
-                ddl = None
+                # an explicit column list from the shared schema cache
+                # skips the footer inference CREATE TABLE would run; csv
+                # keeps its OPTIONS-driven header/inferSchema path, and an
+                # unreadable location lets CREATE TABLE report the error
+                schema = None
                 if s.format != "csv":
-                    # memoized schema → explicit column list skips the
-                    # per-registration footer inference (see
-                    # _SOURCE_SCHEMA_MEMO); csv keeps the OPTIONS-driven
-                    # header/inferSchema path (its inference is part of
-                    # the declared read semantics, not just metadata)
-                    ddl = self._source_schema_ddl(s.location, s.format)
-                if ddl:
+                    with suppress(Exception):
+                        schema = source_schema(self.spark, s.location, s.format)
+                if schema:
+                    ddl = ", ".join(
+                        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+                    )
                     self.spark.sql(
                         f"CREATE TABLE {backing} ({ddl}) USING {s.format}"
                         f" LOCATION '{s.location}'"

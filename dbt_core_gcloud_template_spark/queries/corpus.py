@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import LANG_STOPWORDS, tokens_sql
 from ..operators import chunking, dedup, ranking, text_analysis
-from ..sources.registry import load_table
+from ..sources.registry import load_table, source_schema
 from . import register
 
 _TOK = tokens_sql("text")
@@ -1824,7 +1824,7 @@ def docs_stats_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_chunks=3,
     )
     stream = (
-        spark.readStream.schema(spark.read.parquet(chunk_dir).schema)
+        spark.readStream.schema(source_schema(spark, chunk_dir))
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
         # the arriving feed IS the current snapshot: the parity filter

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import dedup, multimodal, similarity
-from ..sources.registry import load_table
+from ..sources.registry import load_table, source_schema
 from . import register
 from .llm import _TOK
 
@@ -1235,7 +1235,7 @@ def embedding_stream_semdedup_incremental(
         n_chunks=3,
     )
     stream = (
-        spark.readStream.schema(spark.read.parquet(chunk_dir).schema)
+        spark.readStream.schema(source_schema(spark, chunk_dir))
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )

@@ -15,6 +15,7 @@ import os
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -102,15 +103,74 @@ def file_bytes(spark: SparkSession, files: list[str]) -> int:
     return total
 
 
+# Inferred source schemas, keyed on the format, the session confs that
+# change parquet inference, and the data's physical identity: the
+# qualified URI, length and modification time of every leaf file.
+# Inference reads a footer through a one-task Spark job; the identity is
+# Hadoop FileSystem metadata, so a hit runs no job, and a rewritten,
+# replaced, added or removed file re-infers.  StructTypes are
+# session-independent, so one map serves every session.
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _leaf_files(spark: SparkSession, location: str) -> tuple | None:
+    """(qualified URI, length, mtime) of every file under ``location``,
+    sorted; None when the location cannot be listed (missing path,
+    glob, unknown scheme, no credentials)."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(location)
+    try:
+        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(path)
+        leaves = [st]
+        if st.isDirectory():
+            it, leaves = fs.listFiles(path, True), []
+            while it.hasNext():
+                leaves.append(it.next())
+        return tuple(sorted(
+            (f.getPath().toString(), f.getLen(), f.getModificationTime())
+            for f in leaves
+        ))
+    except Py4JError:
+        return None
+
+
+def source_schema(spark: SparkSession, location: str, fmt: str = "parquet") -> StructType:
+    """The schema Spark infers for ``location``, memoized on the data's
+    physical identity (see ``_SCHEMA_MEMO``); an unlistable location is
+    inferred every time.  CSV is refused: its header/inferSchema options
+    are part of a source's declared read semantics, not metadata."""
+    if fmt == "csv":
+        raise ValueError("csv schemas follow the reader options; infer them at read time")
+    leaves = _leaf_files(spark, location)
+    key = (fmt, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS), leaves)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.format(fmt).load(location).schema
+        if leaves is not None:
+            _SCHEMA_MEMO[key] = schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Plain parquet scan → full pushdown/pruning.
+    """Scan one testdata table. Plain parquet scan → full pushdown/pruning;
+    the schema comes from ``source_schema``, so a re-read of an unchanged
+    file runs no inference job.
 
     Parquet TIMESTAMP(NANOS) columns (events.ts) arrive as epoch-nanos
     longs under ``spark.sql.legacy.parquet.nanosAsLong``; convert to a
     proper TIMESTAMP (truncating to micros, same as DuckDB/pyarrow).
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(source_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -129,26 +189,25 @@ def stream_from_path(
     location: str,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """File-source STREAM over an external location (the streaming face
-    of a declared source): schema from a batch probe, nanos timestamps
-    normalized like the batch path.
+    of a declared source): ``schema`` defaults to ``source_schema`` (for
+    CSV, to a header/inferSchema batch read), nanos timestamps normalized
+    like the batch path.
 
     File-stream sources need a directory (in production the source IS a
     directory of arriving files); a single-file location is exposed
     through a symlinked dir so local testdata works unchanged.
     """
     import hashlib
-    import os
     import tempfile
 
-    from pyspark.sql import functions as F
-
     ensure_session_confs(spark)
-    probe = spark.read.format(fmt)
-    if fmt == "csv":
-        probe = probe.option("header", "true").option("inferSchema", "true")
-    schema = probe.load(location).schema
+    if schema is None and fmt == "csv":
+        schema = spark.read.csv(location, header=True, inferSchema=True).schema
+    elif schema is None:
+        schema = source_schema(spark, location, fmt)
     path = location
     if os.path.isfile(path):
         d = os.path.join(

@@ -21,21 +21,20 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.registry import ensure_session_confs, load_table
+from ..sources.registry import ensure_session_confs, source_schema, stream_from_path
 
-# State-store parallelism for finite drains (r12 verdict "r13 rotation
-# item"; SCALE.md "r13 candidate").  Stateful streaming plans pin their
-# state-store partition count to spark.sql.shuffle.partitions at the
-# query's FIRST micro-batch (it freezes into the checkpoint layout and
-# AQE never coalesces stateful exchanges), and every stateful operator
-# commits one state file per partition per micro-batch — at the
-# session's local default of 32 partitions that is hundreds of tiny
-# file creates/renames per batch for KB-sized state (the
-# events_stream_followups drain spent ~20 s at sf0.01 almost entirely
-# on state-store file churn).  A deployment sizes this to its real
+# State-store parallelism for finite drains.  Stateful streaming plans
+# pin their state-store partition count to spark.sql.shuffle.partitions
+# at the query's FIRST micro-batch (it freezes into the checkpoint
+# layout and AQE never coalesces stateful exchanges), and every stateful
+# operator commits one state file per partition per micro-batch — at the
+# session's local default of 32 partitions that is hundreds of tiny file
+# creates/renames per batch for KB-sized state (the
+# events_stream_followups drain spent ~20 s at sf0.01 almost entirely on
+# state-store file churn).  A deployment sizes this to its real
 # per-batch key volume via the env knob; the default suits the finite
-# replay harness (state is KBs).  This is a sizing knob, not a
-# semantics change: partition invariance of every drain is pinned by
+# replay harness (state is KBs).  This is a sizing knob, not a semantics
+# change: partition invariance of every drain is pinned by
 # tests/test_partition_invariance.py and the batch-replay oracles.
 DRAIN_SHUFFLE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
 
@@ -74,8 +73,8 @@ def read_events_stream(
     chunk_by: str = "event_id",
     watermark_sentinel: dict[str, object] | None = None,
 ) -> DataFrame:
-    """File-source stream over the events parquet (schema from a batch
-    probe; nanos ts normalized to TIMESTAMP like the batch path).
+    """File-source stream over the events parquet (schema from
+    ``source_schema``; nanos ts normalized to TIMESTAMP like the batch path).
 
     ``staged_chunks=N`` replays the table as N ``chunk_by``-ordered
     single-file micro-batches via
@@ -90,12 +89,8 @@ def read_events_stream(
     flushes all open windows (see the staging docstring).  Default
     (None) streams the single testdata file as one micro-batch."""
     ensure_session_confs(spark)
-    import hashlib
-    import os
-    import tempfile
-
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = source_schema(spark, path)
     if watermark_sentinel is not None and staged_chunks is None:
         # only the staging harness can append the heartbeat chunk; a
         # caller who asked for the flush must not silently get a drain
@@ -116,27 +111,9 @@ def read_events_stream(
             # integer id must keep raising, not get a nonsense value)
             bigint_time_is_nanos=(chunk_by == "ts"),
         )
-    elif os.path.isfile(path):
-        # file-stream sources need a directory (in production the table
-        # IS a directory of arriving files); expose the single testdata
-        # file through a symlinked dir
-        d = os.path.join(
-            tempfile.gettempdir(),
-            f"events_stream_{hashlib.md5(path.encode()).hexdigest()[:8]}",
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(path, link)
-        path = d
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
+    return stream_from_path(
+        spark, path, max_files_per_trigger=max_files_per_trigger, schema=raw_schema
     )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
 
 
 def tumbling_counts(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
