@@ -69,7 +69,3 @@ def minhash_expr(hash_col: Column, i: int) -> Column:
     """i-th MinHash permutation value of a 28-bit token hash (Spark side)."""
     return (F.lit(MINHASH_A[i]) * hash_col + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
 
-
-def minhash_sql(hash_expr: str, i: int) -> str:
-    """i-th MinHash permutation value for the DuckDB oracle."""
-    return f"(({MINHASH_A[i]} * {hash_expr} + {MINHASH_B[i]}) % {MINHASH_PRIME})"

@@ -28,13 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_PRIME,
-    md5_int28,
-    md5_int60,
-)
+from ..functions.hashing import MINHASH_A, md5_int28, md5_int60, minhash_expr
 from ..functions.text import shingles_expr, tokens_expr
 from ..sources.registry import ensure_parallelism
 from . import telemetry
@@ -158,10 +152,6 @@ def exact_dedup_incremental_bloom(
     return fresh.unionByName(survivors)
 
 
-def _minhash_value(hash_col: Column, i: int) -> Column:
-    return (F.lit(MINHASH_A[i]) * hash_col + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -210,7 +200,7 @@ def minhash_signatures(
     def _mk(i: int):
         # NOTE: must be a unary lambda — a two-arg lambda (e.g. with a
         # default arg) makes Spark pass the element *index* as arg 2.
-        return lambda h: _minhash_value(h, i)
+        return lambda h: minhash_expr(h, i)
 
     sigs = [
         F.array_min(F.transform(F.col("_hashes"), _mk(i))).alias(f"mh{i}")

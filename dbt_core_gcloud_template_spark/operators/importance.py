@@ -39,7 +39,14 @@ from ..sources.registry import ensure_parallelism
 
 def feature_buckets_from_tokens(tok: Column, n_buckets: int) -> Column:
     """Hashed unigram+bigram feature buckets from an ALREADY-BOUND token
-    array column.  Callers must bind the token array as a real column
+    array column.
+
+    PUBLIC CONTRACT shared by DSIR importance weighting and the linear
+    quality classifier (and both of their DuckDB oracles): changing the
+    tokenization, hashing, or bucket arithmetic here changes every
+    consumer's scores in lockstep.
+
+    Callers must bind the token array as a real column
     (``tokens_expr(...).alias(...)`` in a preceding projection): the
     bigram lambda references the array per position, and an inline
     tokens-expression tree there re-tokenizes the document once per
@@ -59,20 +66,6 @@ def feature_buckets_from_tokens(tok: Column, n_buckets: int) -> Column:
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     return F.concat(unis, bis)
-
-
-def feature_buckets(text: Column, n_buckets: int) -> Column:
-    """Array of hashed unigram+bigram feature buckets for a document.
-
-    PUBLIC CONTRACT shared by DSIR importance weighting and the linear
-    quality classifier (and both of their DuckDB oracles): changing the
-    tokenization, hashing, or bucket arithmetic here changes every
-    consumer's scores in lockstep.
-
-    This convenience form inlines the tokenize tree into the feature
-    expression; hot paths should bind the token array as a column and
-    call :func:`feature_buckets_from_tokens` (r13)."""
-    return feature_buckets_from_tokens(tokens_expr(text), n_buckets)
 
 
 def log_odds_micro(

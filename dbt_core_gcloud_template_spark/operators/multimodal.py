@@ -146,38 +146,6 @@ DECODE_SCHEMA = (
 )
 
 
-def synth_bmp_payloads(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic real-BMP fixture payloads, generated distributed
-    (Arrow-batched, one encode per row inside mapInPandas — the same
-    shape as reading raw bytes from object storage).  Each doc gets a
-    two-band image (top half one color, bottom half another) whose
-    dims/colors are closed-form functions of doc_id, so an oracle can
-    verify the DECODED stats analytically while the Spark side works
-    only from the bytes.  Output: doc_id, payload (binary).
-    """
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w = 5 + d % 28  # odd widths exercise 4-byte row padding
-                hh = 2 + d % 14
-                px = np.empty((2 * hh, w, 3), dtype=np.uint8)
-                px[:hh] = [d % 256, (3 * d + 1) % 256, (5 * d + 2) % 256]
-                px[hh:] = [(7 * d + 3) % 256, (11 * d + 4) % 256, (13 * d + 5) % 256]
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return (
-        ensure_parallelism(df)
-        .filter(F.col(id_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"))
-        .mapInPandas(batches, "doc_id bigint, payload binary")
-    )
-
-
 def decode_stats(df: DataFrame) -> DataFrame:
     """REAL image decode over binary payloads: parse each BMP with
     ``decode_image`` (header, row padding, BGR→RGB, bottom-up order)
@@ -253,15 +221,16 @@ def _decode_stats_batches(
 
 
 def synth_decode_stats(df: DataFrame, id_col: str) -> DataFrame:
-    """Fused fixture-encode + decode in ONE Arrow pass — identical
-    output to ``decode_stats(synth_bmp_payloads(df, id_col))`` (the
-    same two per-row functions, composed row-wise), but the BMP bytes
-    never cross the JVM↔Python boundary at all: the chained form ships
-    every payload Python→JVM→Python between two ``mapInPandas`` stages
-    purely to hand it to the next Python function (guide §8: move
-    heavy opaque bytes as few times as possible; §4.1: you control how
-    many columns cross).  ``decode_stats`` remains the entry point for
-    REAL payload columns read from storage.
+    """Deterministic real-BMP fixture images, encoded and decoded in ONE
+    Arrow pass.  Each doc gets a two-band image (top half one color,
+    bottom half another) whose dims/colors are closed-form functions of
+    doc_id, so an oracle can verify the DECODED stats analytically
+    while the Spark side works only from the encoded bytes.  Fusing
+    encode and decode row-wise keeps the BMP bytes from crossing the
+    JVM↔Python boundary at all (guide §8: move heavy opaque bytes as
+    few times as possible; §4.1: you control how many columns cross).
+    ``decode_stats`` is the entry point for REAL payload columns read
+    from storage.
 
     Input: any frame with ``id_col``.  Output: DECODE_SCHEMA.
     """
@@ -272,7 +241,7 @@ def synth_decode_stats(df: DataFrame, id_col: str) -> DataFrame:
             rows: list = []
             for d in pdf["doc_id"].to_numpy():
                 d = int(d)
-                w = 5 + d % 28
+                w = 5 + d % 28  # odd widths exercise 4-byte row padding
                 hh = 2 + d % 14
                 px = np.empty((2 * hh, w, 3), dtype=np.uint8)
                 px[:hh] = [d % 256, (3 * d + 1) % 256, (5 * d + 2) % 256]

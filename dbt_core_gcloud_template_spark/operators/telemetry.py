@@ -12,12 +12,12 @@ fence must be VISIBLE, or "covered everything" silently becomes
 
 This module is the reporting channel.  It is deliberately passive:
 when no collector is active (the default — every registry query, the
-bench, the driver) every call here is a no-op that costs one attribute
-lookup, the operators' plans are unchanged and no extra Spark job
-runs.  When a collector IS active (the engine runner opens one around
-each node), the fenced groups and their member rows are counted and
-the engine writes the records into ``run_results.json`` next to the
-node's status.
+bench, the driver) every call here is a no-op that costs one
+context-variable lookup, the operators' plans are unchanged and no
+extra Spark job runs.  When a collector IS active (the engine runner
+opens one around each node), the fenced groups and their member rows
+are counted and the engine writes the records into
+``run_results.json`` next to the node's status.
 
 What an armed fence costs, per tier:
 
@@ -31,15 +31,18 @@ What an armed fence costs, per tier:
   :func:`record_fence`): one extra enumeration pass per site; pinning
   the exploded corpus instead would materialize every k-gram.
 
-Collectors are thread-local: the engine executes DAG nodes on a
-thread pool and each node's operator calls happen on its own worker
-thread, so records can't bleed between concurrently-running nodes.
+Collectors are context-local (``contextvars``): the engine runs each
+DAG node in its own copy of the run's context, so records can't bleed
+between concurrently-running nodes, and a streaming drain runs each
+``foreachBatch`` body in a copy of the context captured at drain start
+(``streaming.events.run_available_now``), so micro-batch fence records
+reach the caller's collector.
 """
 
 from __future__ import annotations
 
+import contextvars
 import itertools
-import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,13 +56,15 @@ __all__ = [
     "record_metric",
 ]
 
-_tls = threading.local()
+_active: contextvars.ContextVar["FenceTelemetry | None"] = contextvars.ContextVar(
+    "fence_telemetry", default=None
+)
 # observed-metric names must be unique within a plan; one per call
 _observation_ids = itertools.count()
 
 
 class FenceTelemetry:
-    """Context manager collecting fence records on the current thread.
+    """Context manager collecting fence records in the current context.
 
     >>> with FenceTelemetry() as ft:
     ...     semdedup(emb, "id", "vec", max_cluster_size=10_000)
@@ -78,21 +83,18 @@ class FenceTelemetry:
         # is still a reported metric — consumers like the monitor's
         # recall policy must guard it).
         self.metrics: dict[str, float | None] = {}
+        self._tokens: list[contextvars.Token] = []
 
     def __enter__(self) -> "FenceTelemetry":
-        stack = getattr(_tls, "stack", None)
-        if stack is None:
-            stack = _tls.stack = []
-        stack.append(self)
+        self._tokens.append(_active.set(self))
         return self
 
     def __exit__(self, *exc) -> None:
-        _tls.stack.pop()
+        _active.reset(self._tokens.pop())
 
 
 def active() -> FenceTelemetry | None:
-    stack = getattr(_tls, "stack", None)
-    return stack[-1] if stack else None
+    return _active.get()
 
 
 def checkpoint_fenced(

@@ -29,9 +29,11 @@ Structure: ``Engine.build`` schedules nodes; each runs inside
 labels, scheduler pool, timeout watchdog, fence/metric collector,
 timing, error capture), and is dispatched on its ``resource_type``.
 Models share one preamble in ``_run_model`` (frame, contract,
-``--empty``, input-bytes estimate, cost guards) and then run the
-strategy ``_MATERIALIZATIONS`` maps their materialization or
-incremental strategy to; storage primitives live in ``formats.py``.
+``--empty``, input-bytes estimate, cost guards) and then land through
+``_materialize``, which runs the strategy ``_MATERIALIZATIONS`` maps
+their materialization or incremental strategy to; a streaming table's
+micro-batches land through the same ``_materialize``.  Storage
+primitives live in ``formats.py``.
 """
 
 from __future__ import annotations
@@ -557,7 +559,7 @@ class Engine:
             watchdog = threading.Timer(float(timeout_s), lambda: sc.cancelJobGroup(uid))
             watchdog.daemon = True
             watchdog.start()
-        # thread-local, so concurrent nodes each get their own records;
+        # context-local, so concurrent nodes each get their own records;
         # the operators' eager fenced-group counts run inside this
         # node's job group and watchdog like any other job
         collector = fence_telemetry.FenceTelemetry()
@@ -839,8 +841,12 @@ class Engine:
         The node's FIRST source dependency becomes a file-source stream
         (new files only, tracked by the stream checkpoint under the
         state dir); the model's SQL runs over the stream as a temp
-        view; ``foreachBatch`` lands each micro-batch into the target —
-        key-merge when ``unique_key`` is set, else append.  Trigger is
+        view.  Each micro-batch lands exactly like an incremental run
+        whose frame is that batch (:meth:`_materialize`): the first
+        creates the table, later ones take the node's
+        ``incremental_strategy`` (default merge on ``unique_key``,
+        partition-scoped on a partitioned target, native MERGE on
+        Delta/Iceberg) after ``on_schema_change``.  Trigger is
         ``availableNow``: each `build` drains what's new and stops, so
         the node fits the batch DAG while only ever paying for NEW
         data — rerunning a built project re-reads nothing.
@@ -851,6 +857,7 @@ class Engine:
         the window/group key so reopened windows upsert).
         """
         from ..sources.registry import stream_from_path
+        from ..streaming.events import run_available_now
 
         src_uids = [u for u in node.depends_on if u.startswith("source.")]
         if not src_uids:
@@ -894,32 +901,21 @@ class Engine:
             node.compiled_sql,
         )
         sdf = self.spark.sql(sql)
-        key_cols = as_list(node.config.get("unique_key"))
         self._ensure_schema(node.schema)
         n_batches = 0
 
-        def _land(batch: DataFrame, batch_id: int) -> None:
+        def _micro_batch(batch: DataFrame, batch_id: int) -> None:
             nonlocal n_batches
             n_batches += 1
-            if not self.spark.catalog.tableExists(fqn):
-                self.write_relation(batch, fqn, node.config)
-                return
-            existing = self.spark.table(fqn)
-            if key_cols:
-                keys = batch.select(*key_cols).distinct()
-                kept = existing.join(keys, key_cols, "left_anti")
-                out = kept.unionByName(batch, allowMissingColumns=True)
-            else:
-                out = existing.unionByName(batch, allowMissingColumns=True)
-            self.write_relation(out, fqn, node.config, self_ref=True)
+            exists = self.spark.catalog.tableExists(fqn)
+            res = self._materialize(node, batch, exists=exists)
+            if isinstance(res, NodeResult):
+                raise RuntimeError(res.message)
 
-        writer = (
-            sdf.writeStream.foreachBatch(_land)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+        mode = "update" if node.config.get("aggregated") else "append"
+        run_available_now(
+            sdf, output_mode=mode, foreach_batch=_micro_batch, checkpoint=ckpt
         )
-        q = writer.outputMode("update" if node.config.get("aggregated") else "append").start()
-        q.awaitTermination()
         self._persist_docs(node)
         return NodeResult(
             node.unique_id, "success",
@@ -1080,10 +1076,10 @@ class Engine:
         return df
 
     def _run_model(self, node: Node, full_refresh: bool) -> NodeResult:
-        """Materialize one model: a shared preamble, then the strategy
-        ``_MATERIALIZATIONS`` maps the node's materialization (or, for
-        an existing incremental target, its incremental strategy) to.
-        A strategy returns its success message and raises on failure."""
+        """Materialize one model: a shared preamble, then
+        :meth:`_materialize` with the compiler's ``is_incremental()``
+        answer.  A strategy returns its success message and raises on
+        failure."""
         mat = node.materialized
         if mat == "ephemeral":
             # never materialized — consumers carry the SQL as a CTE
@@ -1092,44 +1088,54 @@ class Engine:
             return self._run_streaming_table(
                 node, effective_full_refresh(node.config, full_refresh)
             )
-        python = node.config.get("language") == "python"
-        if python:
+        if node.config.get("language") == "python":
             df = self._exec_python_model(node)
         else:
             df = self.spark.sql(node.compiled_sql)
         self._enforce_contract(df, node)
-        strategy = node.config.get("incremental_strategy", "merge")
-        if mat != "incremental":
-            # python models have no views
-            key = mat if mat == "table" or (mat == "view" and not python) else None
-        elif strategy == "microbatch":
-            key = strategy
-        elif node.incremental:  # compile's is_incremental() answer
-            key = "incremental"  # an existing target: strategy picked below
-        else:
-            key = "table"
         # a view reads nothing when it is created: no cost guards
-        if key != "view" and self._empty:
+        if mat != "view" and self._empty:
             df = df.limit(0)
         est = self._estimate_input_bytes(df)
-        if key != "view":
+        if mat != "view":
             self._check_bytes_cap(est, node.unique_id)
             self._check_partition_filters(df, node)
+        msg = self._materialize(node, df, exists=node.incremental)
+        if isinstance(msg, NodeResult):
+            return msg
+        return NodeResult(node.unique_id, "success", message=msg, input_bytes=est)
+
+    def _materialize(self, node: Node, df: DataFrame, exists: bool):
+        """Land ``df`` as the node's relation: pick the strategy
+        ``_MATERIALIZATIONS`` maps the node's materialization (or, when
+        an incremental or streaming target ``exists``, its incremental
+        strategy) to, reconcile an existing target's schema, and run
+        it.  Returns the strategy's success message, or an error
+        NodeResult."""
+        mat = node.materialized
+        strategy = node.config.get("incremental_strategy", "merge")
         inc = None
-        if key == "incremental":
+        if mat not in ("incremental", "streaming_table"):
+            # python models have no views
+            view = mat == "view" and node.config.get("language") != "python"
+            key = mat if mat == "table" or view else None
+        elif mat == "incremental" and strategy == "microbatch":
+            key = strategy
+        elif exists:
             df, inc = self._reconcile_schema(node, df)
             if isinstance(inc, NodeResult):
                 return inc
             # schema drift and every other strategy take the merge path
             append_like = strategy in ("append", "insert_overwrite")
             key = strategy if append_like and not inc.new_cols else "merge"
+        else:
+            key = "table"
         fn = self._MATERIALIZATIONS.get(key)
         if fn is None:
             return NodeResult(
                 node.unique_id, "error", message=f"unknown materialization {mat}"
             )
-        msg = fn(self, node, df, inc)
-        return NodeResult(node.unique_id, "success", message=msg, input_bytes=est)
+        return fn(self, node, df, inc)
 
     def _mat_view(self, node: Node, df: DataFrame, inc):
         self.create_view(node.fqn, node.compiled_sql)

@@ -541,10 +541,8 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # fused single Arrow pass (identical per-row encode∘decode): the
-    # chained synth_bmp_payloads → decode_stats form shipped every BMP
-    # payload across the Python↔JVM boundary twice just to hand it to
-    # the next mapInPandas stage (r13 optimization; guide §8)
+    # fused single Arrow pass (per-row encode∘decode): the BMP bytes
+    # never cross the Python↔JVM boundary (guide §8)
     return multimodal.synth_decode_stats(docs, "doc_id")
 
 
@@ -720,13 +718,16 @@ def _projection_oracle(out_dim: int = _PROJ_DIM, dim: int = _DIM) -> str:
         + ", ".join("[" + ", ".join(repr(s) for s in row) + "]" for row in signs)
         + "]"
     )
+    # the sign matrix is a one-row CTE: a literal inside the lambda is
+    # re-materialized per list element
     return f"""
+    WITH m AS (SELECT {lits}::DOUBLE[][] AS w)
     SELECT vec_id,
            CAST(t.i - 1 AS INT) AS proj_dim,
            round(list_sum(list_transform(generate_series(1, {dim}),
-                 j -> embedding[j]::DOUBLE * (({lits}::DOUBLE[][])[t.i])[j]))
+                 j -> embedding[j]::DOUBLE * (w[t.i])[j]))
                  * 0.25, 6) AS value
-    FROM embeddings, generate_series(1, {out_dim}) t(i)
+    FROM embeddings, generate_series(1, {out_dim}) t(i), m
     """
 
 

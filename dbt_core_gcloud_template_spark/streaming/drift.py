@@ -3,7 +3,7 @@ baseline (SURVEY.md §2.9 designed extension — the reference's nightly
 monitoring cadence, infra/90-monitoring.sh:114-145, moved to the
 arrival boundary).
 
-The natural composition of the two r10 families, and cheap because
+The composition of the drift and streaming families, cheap because
 bucket counts are ADDITIVE (:func:`operators.drift.bucket_counts`):
 each arriving micro-batch contributes a vocabulary-sized
 (feature, bucket) count DELTA, the stored count table folds them with
@@ -83,7 +83,7 @@ def psi_stream_into_counts(
     appends/MERGEs and the checkpoint gives exactly-once.
 
     ``compact_every`` bounds the stored count table's FILE count for a
-    long-running stream (r11 verdict task #4): without it the fold
+    long-running stream: without it the fold
     re-lists one parquet file per micro-batch forever.  Every N
     batches the fold-so-far (vocabulary-sized, pinned in memory via
     localCheckpoint before the dir is touched) rewrites the counts dir
@@ -137,7 +137,7 @@ def psi_stream_into_counts(
             # swap-by-rename instead of mode("overwrite") on the live
             # dir: the overwrite deletes counts_dir BEFORE the new
             # snapshot commits, so a crash in between lost the ENTIRE
-            # stored count state (r12 advice).  Writing the snapshot to
+            # stored count state.  Writing the snapshot to
             # a sibling temp dir and renaming leaves either the old or
             # the new state at every crash point (the .old hand-off
             # window is healed at the next drain start / fold, see
@@ -153,16 +153,9 @@ def psi_stream_into_counts(
             os.rename(tmp, counts_dir)
             shutil.rmtree(old, ignore_errors=True)
 
-    from .events import pinned_drain_parallelism
+    from .events import run_available_now
 
-    with pinned_drain_parallelism(spark):
-        q = (
-            stream.writeStream.foreachBatch(_micro)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(stream, foreach_batch=_micro, checkpoint=ckpt_dir)
     if os.path.isdir(counts_dir):
         folded = _fold()
     else:

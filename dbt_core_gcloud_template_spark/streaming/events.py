@@ -15,21 +15,25 @@ exactly-once end-to-end with checkpointing.
 
 from __future__ import annotations
 
+import contextvars
 import os
+import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.registry import ensure_session_confs, source_schema, stream_from_path
 
 # State-store parallelism for finite drains.  Stateful streaming plans
 # pin their state-store partition count to spark.sql.shuffle.partitions
-# at the query's FIRST micro-batch (it freezes into the checkpoint
-# layout and AQE never coalesces stateful exchanges), and every stateful
-# operator commits one state file per partition per micro-batch — at the
-# session's local default of 32 partitions that is hundreds of tiny file
-# creates/renames per batch for KB-sized state (the
+# of the session the query clones at start() (it freezes into the
+# checkpoint layout and AQE never coalesces stateful exchanges), and
+# every stateful operator commits one state file per partition per
+# micro-batch — at the session's local default of 32 partitions that
+# is hundreds of tiny file creates/renames per batch for KB-sized state (the
 # events_stream_followups drain spent ~20 s at sf0.01 almost entirely on
 # state-store file churn).  A deployment sizes this to its real
 # per-batch key volume via the env knob; the default suits the finite
@@ -46,23 +50,29 @@ def drain_shuffle_partitions() -> int:
         return 4
 
 
+_PIN_LOCK = threading.Lock()
+
+
 @contextmanager
 def pinned_drain_parallelism(spark: SparkSession):
     """Scope spark.sql.shuffle.partitions to the drain's state-store
-    sizing for the duration of a finite drain, restoring the session
-    value after.  Drains run synchronously on the calling thread
-    (``awaitTermination`` inside the scope), so the override cannot
-    leak into a concurrently planned batch query of the same caller."""
+    sizing while a streaming query starts, restoring the session value
+    after.  ``start()`` clones the session for the query, so the
+    pinned value rides the drain while batch queries planned
+    concurrently keep the session's own; the lock keeps concurrent
+    drains (engine nodes on a thread pool) from restoring each other's
+    pinned value."""
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(drain_shuffle_partitions()))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    with _PIN_LOCK:
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, str(drain_shuffle_partitions()))
+        try:
+            yield
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def read_events_stream(
@@ -350,73 +360,38 @@ def enrich_with_dim(
     return stream.join(F.broadcast(dim), on, how)
 
 
-def run_available_now(df: DataFrame, query_name: str, output_mode: str = "append"):
-    """Drain the stream with availableNow into a memory sink; returns the
-    finished StreamingQuery (results: spark.table(query_name)).  The
-    drain runs under :func:`pinned_drain_parallelism` — the state-store
-    partition count freezes at the first micro-batch, so it must be
-    sized for the drain's state volume, not the session's batch
-    parallelism."""
+def run_available_now(
+    df: DataFrame,
+    query_name: str | None = None,
+    output_mode: str = "append",
+    *,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Drain the stream with trigger ``availableNow`` and return the
+    finished StreamingQuery — the one drain every streaming consumer
+    runs through.
+
+    Without ``foreach_batch`` the rows land in a memory sink (results:
+    ``spark.table(query_name)``).  With it, each micro-batch is handed
+    to ``foreach_batch(batch, batch_id)``, run in a copy of the
+    ``contextvars`` context captured here: Spark calls the body on its
+    streaming thread, and the copy carries the caller's strict-fence
+    arming and telemetry collector there, so a micro-batch is fenced
+    and reported like the caller's own code.  ``checkpoint`` sets the
+    query's checkpointLocation.  The query starts under
+    :func:`pinned_drain_parallelism`."""
+    writer = df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if foreach_batch is None:
+        writer = writer.format("memory").queryName(query_name)
+    else:
+        ctx = contextvars.copy_context()
+        writer = writer.foreachBatch(
+            lambda batch, batch_id: ctx.copy().run(foreach_batch, batch, batch_id)
+        )
     with pinned_drain_parallelism(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
-def stream_into_incremental(
-    stream: DataFrame,
-    spark: SparkSession,
-    target_fqn: str,
-    key_cols: list[str],
-    checkpoint_dir: str,
-    write_relation,
-    config: dict | None = None,
-    read_relation=None,
-):
-    """foreachBatch → incremental-merge sink (the streaming version of
-    the `incremental` materialization).
-
-    ``write_relation(df, fqn, cfg)`` owns the sink; callers must make
-    it overwrite-safe for a plan that reads the target (stage-and-swap
-    or versioned-pointer write — Spark refuses a direct overwrite of
-    its own input).  ``read_relation(fqn)`` defaults to the catalog
-    read; pass a path-based reader for partitioned targets (the
-    CatalogFileIndex lists partitions at execution time — see
-    ParquetFormat.read_for_merge).  ``config`` flows through to the
-    writer, so an Engine-backed writer with ``partition_by`` rewrites
-    only the batch's partitions.  At scale: each micro-batch is small
-    by construction, so the anti-join's left side prunes to the
-    touched partitions and everything else is Delta ``MERGE INTO`` in
-    production.
-    """
-    cfg = dict(config or {})
-    read = read_relation or spark.table
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        if not spark.catalog.tableExists(target_fqn):
-            write_relation(batch, target_fqn, cfg)
-            return
-        existing = read(target_fqn)
-        keys = batch.select(*key_cols).distinct()
-        kept = existing.join(keys, key_cols, "left_anti")
-        write_relation(
-            kept.unionByName(batch, allowMissingColumns=True),
-            target_fqn,
-            cfg,
-        )
-
-    with pinned_drain_parallelism(spark):
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        q = writer.start()
+    q.awaitTermination()
     return q

@@ -32,8 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import telemetry
-from ..operators.fences import UNSET, strict_enabled, strict_fences
+from ..operators.fences import UNSET
 from ..operators.similarity import semdedup_incremental
 
 
@@ -311,64 +310,40 @@ def semdedup_stream_into_index(
     batch ``semdedup`` when batches arrive id-ordered.
 
     Skew fence — ``max_cluster_size`` / ``on_oversize`` pass through
-    to each micro-batch's :func:`semdedup_incremental`, and the
-    caller's strict-fence arming and telemetry collector are
-    re-entered on the streaming thread (see the capture note in the
-    body), so a pathological micro-batch trips the SAME guard and
-    reports through the SAME per-node channel as the batch tier.
+    to each micro-batch's :func:`semdedup_incremental`, and the drain
+    runs each micro-batch in the caller's context
+    (:func:`streaming.events.run_available_now`), so a pathological
+    micro-batch trips the SAME guard under the caller's strict-fence
+    arming and reports through the SAME per-node channel as the batch
+    tier.
     """
     emb_dir = os.path.join(state_dir, "stored_embeddings")
     verd_dir = os.path.join(state_dir, "verdicts")
     ckpt_dir = os.path.join(state_dir, "checkpoint")
 
-    # Fence context capture (r10 verdict stretch): ``foreachBatch``
-    # runs the micro-batch body on Spark's streaming thread, where
-    # neither the caller's context-local strict-fence arming nor their
-    # thread-local telemetry collector is visible — so a pathological
-    # micro-batch would run UNFENCED (and un-reported) even inside an
-    # armed engine node.  Snapshot both at drain start and re-enter
-    # them per batch; micro-batches run sequentially, so re-entering
-    # the caller's collector from the streaming thread cannot race.
-    _armed = strict_enabled()
-    _collector = telemetry.active()
-
     def _micro(batch: DataFrame, batch_id: int) -> None:
-        import contextlib
-
-        with contextlib.ExitStack() as ctx:
-            if _armed:
-                ctx.enter_context(strict_fences(True))
-            if _collector is not None:
-                ctx.enter_context(_collector)
-            batch = batch.select(id_col, vec_col)
-            if os.path.isdir(emb_dir):
-                old = spark.read.parquet(emb_dir)
-            else:
-                old = batch.limit(0)
-            verdicts = semdedup_incremental(
-                batch,
-                old,
-                id_col,
-                vec_col,
-                n_lists=n_lists,
-                threshold=threshold,
-                centroids=centroids,
-                max_cluster_size=max_cluster_size,
-                on_oversize=on_oversize,
-            )
-            verdicts.write.mode("append").parquet(verd_dir)
-            batch.write.mode("append").parquet(emb_dir)
-
-    from .events import pinned_drain_parallelism
-
-    with pinned_drain_parallelism(spark):
-        q = (
-            stream.writeStream.foreachBatch(_micro)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        batch = batch.select(id_col, vec_col)
+        if os.path.isdir(emb_dir):
+            old = spark.read.parquet(emb_dir)
+        else:
+            old = batch.limit(0)
+        verdicts = semdedup_incremental(
+            batch,
+            old,
+            id_col,
+            vec_col,
+            n_lists=n_lists,
+            threshold=threshold,
+            centroids=centroids,
+            max_cluster_size=max_cluster_size,
+            on_oversize=on_oversize,
         )
-        q.awaitTermination()
+        verdicts.write.mode("append").parquet(verd_dir)
+        batch.write.mode("append").parquet(emb_dir)
+
+    from .events import run_available_now
+
+    run_available_now(stream, foreach_batch=_micro, checkpoint=ckpt_dir)
     if not os.path.isdir(verd_dir):
         # no micro-batch ever fired (an empty feed): an empty verdict
         # frame with the contract schema, derived the same way a

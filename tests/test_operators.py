@@ -1205,7 +1205,7 @@ def test_semdedup_collapses_within_cluster_dups(spark):
 
 
 def test_fence_telemetry_thread_isolation():
-    """Collectors are thread-local: the engine runs DAG nodes on a
+    """Collectors are context-local: the engine runs DAG nodes on a
     thread pool, and a fence tripped by one node must not bleed into a
     concurrently-running node's record list."""
     import threading

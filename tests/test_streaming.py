@@ -215,35 +215,86 @@ def test_stateful_running_totals_match_batch(spark, sf_dir, stream):
     assert all(r["n_events"] == r["b_n"] and r["last_ts"] == r["b_ts"] for r in merged)
 
 
-def test_foreach_batch_incremental(spark, sf_dir, stream, tmp_path):
-    spark.sql("CREATE DATABASE IF NOT EXISTS stream_t")
+def _streaming_project(spark, tmp_path, sf_dir, schema, model_sql):
+    """A one-model project whose ``streaming_table`` reads a feed
+    directory holding a copy of the events parquet; returns the engine
+    and the feed directory."""
+    import shutil
 
-    def write_relation(df, fqn, cfg):
-        df.write.format("parquet").mode("overwrite").option(
-            "path", str(tmp_path / fqn)
-        ).saveAsTable(fqn)
+    from dbt_core_gcloud_template_spark.plans.runner import Engine
 
-    # self-ref merge needs a staged write (same pattern as
-    # Engine.write_relation self_ref=True — persist() does NOT satisfy
-    # Spark's can't-overwrite-input check)
-    def safe_write(df, fqn, cfg):
-        stg = str(tmp_path / (fqn.replace(".", "_") + "_stg"))
-        df.write.mode("overwrite").parquet(stg)
-        write_relation(spark.read.parquet(stg), fqn, cfg)
-
-    agg = (
-        se.tumbling_counts(stream)
-        .withColumnRenamed("window_start", "ws")
+    src_dir = tmp_path / "feed"
+    src_dir.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", src_dir / "part-000.parquet")
+    root = tmp_path / "stproj"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text("name: st\nprofile: st\n")
+    (root / "profiles.yml").write_text(
+        "st:\n  target: dev\n  outputs:\n    dev:\n"
+        f"      schema: {schema}\n      threads: 2\n"
     )
-    se.stream_into_incremental(
-        agg,
-        spark,
-        "stream_t.daily",
-        ["ws", "event_type"],
-        str(tmp_path / "ckpt"),
-        safe_write,
+    (root / "models" / "src.yml").write_text(
+        "sources:\n  - name: feed\n    schema: raw_feed\n    tables:\n"
+        "      - name: events\n        external:\n"
+        f"          location: {src_dir}\n"
+        "          format: parquet\n"
     )
-    assert spark.table("stream_t.daily").count() > 0
+    (root / "models" / "live_events.sql").write_text(model_sql)
+    eng = Engine(spark, str(root), state_dir=str(tmp_path / "ststate"))
+    return eng, src_dir
+
+
+def _build_ok(eng):
+    results, _ = eng.build()
+    assert results.status_counts.get("error", 0) == 0, [
+        (r.unique_id, r.message) for r in results.results
+    ]
+
+
+def _deliver_upserts(tmp_path, src_dir, batch):
+    """Drop one new file into the feed: 10 brand-new event_ids and 5
+    existing ones re-delivered with value 999.0."""
+    import glob
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    new_rows = (
+        batch.limit(15)
+        .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
+        .limit(10)
+        .unionByName(batch.limit(5).withColumn("value", F.lit(999.0)))
+    )
+    new_rows.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
+    staged = glob.glob(str(tmp_path / "stage" / "*.parquet"))[0]
+    shutil.copy(staged, src_dir / "part-001.parquet")
+
+
+def test_foreach_batch_incremental(spark, sf_dir, tmp_path):
+    """An aggregated ``streaming_table`` (update-mode micro-batches)
+    keyed on the window key lands one row per (window, event_type),
+    matching the batch aggregate."""
+    from pyspark.sql import functions as F
+
+    from dbt_core_gcloud_template_spark.sources.registry import load_table
+
+    eng, _ = _streaming_project(
+        spark, tmp_path, sf_dir, "stream_t",
+        "{{ config(materialized='streaming_table', aggregated=true,"
+        " unique_key=['ws', 'event_type']) }}\n"
+        "select window(ts, '1 hour').start as ws, event_type,"
+        " count(*) as n_events\n"
+        "from {{ source('feed', 'events') }}\n"
+        "group by window(ts, '1 hour'), event_type",
+    )
+    _build_ok(eng)
+    got = spark.table("stream_t.live_events")
+    assert got.count() > 0
+    batch = load_table(spark, sf_dir, "events").groupBy(
+        F.window("ts", "1 hour").start.alias("ws"), "event_type"
+    ).count()
+    assert got.count() == batch.count()
+    assert got.agg(F.sum("n_events")).first()[0] == batch.agg(F.sum("count")).first()[0]
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, stream):
@@ -413,39 +464,15 @@ def test_streaming_table_materialization(spark, sf_dir, tmp_path):
     via Structured Streaming; adding a file to the source dir and
     rebuilding processes ONLY the new file (stream checkpoint), merged
     on unique_key."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from dbt_core_gcloud_template_spark.plans.runner import Engine
     from dbt_core_gcloud_template_spark.sources.registry import load_table
 
-    src_dir = tmp_path / "feed"
-    src_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src_dir / "part-000.parquet")
-
-    root = tmp_path / "stproj"
-    (root / "models").mkdir(parents=True)
-    (root / "project.yml").write_text("name: st\nprofile: st\n")
-    (root / "profiles.yml").write_text(
-        "st:\n  target: dev\n  outputs:\n    dev:\n      schema: eng_stream\n      threads: 2\n"
-    )
-    (root / "models" / "src.yml").write_text(
-        "sources:\n  - name: feed\n    schema: raw_feed\n    tables:\n"
-        "      - name: events\n        external:\n"
-        f"          location: {src_dir}\n"
-        "          format: parquet\n"
-    )
-    (root / "models" / "live_events.sql").write_text(
+    eng, src_dir = _streaming_project(
+        spark, tmp_path, sf_dir, "eng_stream",
         "{{ config(materialized='streaming_table', unique_key='event_id') }}\n"
         "select event_id, ts, user_id, event_type, value\n"
-        "from {{ source('feed', 'events') }}\nwhere event_type != 'error'"
+        "from {{ source('feed', 'events') }}\nwhere event_type != 'error'",
     )
-    eng = Engine(spark, str(root), state_dir=str(tmp_path / "ststate"))
-    results, _ = eng.build()
-    assert results.status_counts.get("error", 0) == 0, [
-        (r.unique_id, r.message) for r in results.results
-    ]
+    _build_ok(eng)
     batch = load_table(spark, sf_dir, "events").filter("event_type != 'error'")
     n1 = spark.table("eng_stream.live_events").count()
     assert n1 == batch.count()
@@ -455,20 +482,37 @@ def test_streaming_table_materialization(spark, sf_dir, tmp_path):
     assert spark.table("eng_stream.live_events").count() == n1
 
     # new file: 10 brand-new event_ids + 5 overlapping (merge upserts)
-    new_rows = (
-        batch.limit(15)
-        .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
-        .limit(10)
-        .unionByName(batch.limit(5).withColumn("value", F.lit(999.0)))
-    )
-    new_rows.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
-    import glob
-
-    staged = glob.glob(str(tmp_path / "stage" / "*.parquet"))[0]
-    shutil.copy(staged, src_dir / "part-001.parquet")
+    _deliver_upserts(tmp_path, src_dir, batch)
     eng.build()
     out = spark.table("eng_stream.live_events")
     assert out.count() == n1 + 10  # 10 new ids; 5 upserts replaced in place
+    assert out.filter("value = 999.0").count() == 5
+
+
+def test_streaming_table_partitioned_merge_keeps_history(spark, sf_dir, tmp_path):
+    """A partitioned ``streaming_table`` merges a micro-batch through
+    the incremental path (path read of the target, partition-scoped
+    rewrite): the upsert delivery and a later rebuild both succeed and
+    keep every earlier row."""
+    from dbt_core_gcloud_template_spark.sources.registry import load_table
+
+    eng, src_dir = _streaming_project(
+        spark, tmp_path, sf_dir, "eng_stream_part",
+        "{{ config(materialized='streaming_table', partition_by='event_type',"
+        " unique_key='event_id') }}\n"
+        "select event_id, ts, user_id, event_type, value\n"
+        "from {{ source('feed', 'events') }}",
+    )
+    _build_ok(eng)
+    batch = load_table(spark, sf_dir, "events")
+    n1 = spark.table("eng_stream_part.live_events").count()
+    assert n1 == batch.count()
+
+    _deliver_upserts(tmp_path, src_dir, batch)
+    _build_ok(eng)
+    _build_ok(eng)
+    out = spark.table("eng_stream_part.live_events")
+    assert out.count() == n1 + 10
     assert out.filter("value = 999.0").count() == 5
 
 
@@ -772,12 +816,13 @@ def test_stage_sentinel_guards(spark, tmp_path):
 def test_stream_semdedup_threads_fence_into_microbatches(
     spark, sf_dir, tmp_path
 ):
-    """r10 verdict stretch: inside ``foreachBatch`` the per-batch
-    semdedup runs on Spark's streaming thread, where the caller's
-    telemetry collector (thread-local) and strict-fence arming
-    (context-local) are invisible — the drain must re-enter both so an
-    over-cap micro-batch trips the same ``max_cluster_size`` guard and
-    reports through the same per-node channel as the batch tier."""
+    """Inside ``foreachBatch`` the per-batch semdedup runs on Spark's
+    streaming thread, outside the caller's context — the drain runs
+    each micro-batch in a copy of the context captured at drain start,
+    so the caller's telemetry collector and strict-fence arming hold
+    there: an over-cap micro-batch trips the same ``max_cluster_size``
+    guard and reports through the same per-node channel as the batch
+    tier."""
     from pyspark.sql import functions as F
 
     from dbt_core_gcloud_template_spark.operators import telemetry
